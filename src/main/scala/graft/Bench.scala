@@ -50,6 +50,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Sessions.codegenCacheConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.ScaleGuard.register(spark) // plan lint, warn mode

@@ -28,6 +28,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Sessions.codegenCacheConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // dogfood the plan lint across every gated query: an

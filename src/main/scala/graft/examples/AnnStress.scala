@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.functions.{Ivf, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness for the similarity-search path over an
@@ -13,12 +12,7 @@ import org.apache.spark.sql.functions._
 object AnnStress {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/root/testdata/sf0.1/embeddings.parquet")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-ann-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = spark.read.parquet(path)
     val queries = emb.filter(col("vec_id") < 20)

@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.Tables
 import graft.operators.BloomJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what the bloom prefilter actually saves on a SHUFFLE join
@@ -16,14 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object BloomStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.Sessions.builder(32, "graft-bloom-stress")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle joins
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.functions.Dedup
 import graft.operators.ConnectedComponents
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stress/timing harness for the near-dup clustering path: edges →
@@ -24,12 +23,7 @@ object CcStress {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/root/testdata/sf0.1/documents.parquet")
     val mode = args.drop(1).headOption.getOrElse("shingle")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-cc-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(path)
     println(s"docs: ${docs.count()}")

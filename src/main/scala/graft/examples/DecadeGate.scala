@@ -137,13 +137,7 @@ object DecadeGate {
     if (!exists(sf10)) ScaleUp.main(Array(sf1, sf10, "10"))
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(cpus.toInt, "graft-decade-gate").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val load0 = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.functions.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness for the dedup path: run minhash candidates +
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
 object DedupStress {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/root/testdata/sf0.1/documents.parquet")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-dedup-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(path)
     println(s"docs: ${docs.count()}")

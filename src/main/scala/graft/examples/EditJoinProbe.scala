@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement probe for the q_linkage candidate pipeline: times each
@@ -16,12 +15,7 @@ object EditJoinProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/repo/tmp/sf1"
     val iters = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(cpus.toInt, "graft-edit-join-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val c = graft.Tables.customer(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Convergence probe for the h-index coreness iteration: wall time,
   * round count, and coreness histogram on the gated near-dup graph.
   *
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object KCoreProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-kcore-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val edges = graft.functions.Dedup.sharedShingleEdges(

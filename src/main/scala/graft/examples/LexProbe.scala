@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the bucketed lexical index's SERVING cost in isolation
@@ -11,13 +10,8 @@ import org.apache.spark.sql.functions._
 object LexProbe {
   def main(args: Array[String]): Unit = {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-lex-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables.documents(spark, d)
     val root = java.nio.file.Files.createTempDirectory("graft_lexprobe").toString

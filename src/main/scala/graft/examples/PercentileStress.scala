@@ -20,12 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object PercentileStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-percentile-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val li1 = graft.Tables.lineitem(spark, sf)

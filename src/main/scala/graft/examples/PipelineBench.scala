@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.pipeline._
-import org.apache.spark.sql.SparkSession
 
 /** Throughput of the typed pipeline API (the pippin-parity surface)
   * over N in-memory elements: filter → map → sum, and the same chain
@@ -12,11 +11,7 @@ import org.apache.spark.sql.SparkSession
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(600000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-pipeline-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

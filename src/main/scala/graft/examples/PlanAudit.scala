@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for the headline queries so scan
   * pruning (ReadSchema), predicate pushdown (PushedFilters),
@@ -12,12 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(4, "graft-plan-audit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq

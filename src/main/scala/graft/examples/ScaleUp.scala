@@ -63,12 +63,10 @@ object ScaleUp {
     // growth pins; this produces the corpus shape those operators
     // exist for, at any SF the record runs at.
     val skewPct = if (args.length > 3) args(3).toInt else 0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.Sessions.builder(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-scale-up")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // events.ts layout varies by generator round (TIMESTAMP(NANOS) or

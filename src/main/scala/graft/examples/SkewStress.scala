@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Boilerplate-skew stress for the span/dedup/decontam family
   * (VERDICT r9 ask #5): runs the family's gated queries against a
   * SKEWED corpus — [[ScaleUp]]'s skew mode plants one license-header
@@ -48,12 +46,9 @@ object SkewStress {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/repo/tmp/sf0.1skew"
     val runs = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.Sessions.builder(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-skew-stress")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.streaming.Streams
-import org.apache.spark.sql.SparkSession
 
 import java.sql.Timestamp
 
@@ -15,12 +14,7 @@ case class ExEvent(ts: Timestamp, event_type: String, value: Double)
   */
 object StreamingExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(4, "graft-streaming-example").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

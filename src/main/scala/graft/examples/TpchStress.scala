@@ -17,13 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object TpchStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(32, "graft-tpch-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // per-stage task durations → skew = max/median of the widest stage

@@ -197,9 +197,14 @@ object EditDistanceJoin {
       // (HashPartitioning(bkey) satisfies the operator's
       // ClusteredDistribution(band, bkey); the leading constant sort
       // key is free). Pair sets are band-value-independent for any
-      // constant, so lit(0) is exact.
+      // constant, so lit(0) is exact. Any other band fails the job
+      // here instead of merging bands silently; on deletionKeys' own
+      // literal band the check folds away at plan time.
+      val band0 = keyed.filter(when(col("band") === 0, lit(true)).otherwise(
+        raise_error(lit("EditDistanceJoin.candidatePairs: band must be 0 " +
+          "(a deletionKeys key table)"))))
       graft.plans.SortedRunPairs.pairs(
-          keyed.select(col("id"), col("bkey"))
+          band0.select(col("id"), col("bkey"))
             .repartition(par, col("bkey"))
             .select(col("id"), lit(0).as("band"), col("bkey")),
           maxBucket)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
@@ -123,19 +124,24 @@ object Bm25TopK {
           else if (bNull) false
           else a < b
 
+        // score DESC under Spark's double ordering (NaN above every
+        // number and equal to itself, -0.0 == 0.0) — the order the
+        // TopKPerKey final merge sorts by; Java's `>` would make a NaN
+        // score lose every comparison instead
+        def beats(s: Double, dNull: Boolean, d: Long,
+                  ws: Double, wn: Boolean, wd: Long): Boolean = {
+          val c = SQLOrderingUtil.compareDoubles(s, ws)
+          c > 0 || (c == 0 && docLt(dNull, d, wn, wd))
+        }
+
         def offer(q: Int, dNull: Boolean, d: Long, s: Double): Unit = {
           val n = heapN(q)
           val sc = heapScore(q); val dc = heapDoc(q); val nu = heapNull(q)
-          if (n == limit) {
-            // compare against the worst kept (last slot)
-            val ws = sc(n - 1); val wd = dc(n - 1); val wn = nu(n - 1)
-            val better = s > ws || (s == ws && docLt(dNull, d, wn, wd))
-            if (!better) return
-          }
+          // compare against the worst kept (last slot)
+          if (n == limit && !beats(s, dNull, d, sc(n - 1), nu(n - 1), dc(n - 1))) return
           // insertion position: first slot this row beats
           var i = if (n == limit) n - 1 else n
-          while (i > 0 && (s > sc(i - 1) ||
-            (s == sc(i - 1) && docLt(dNull, d, nu(i - 1), dc(i - 1))))) {
+          while (i > 0 && beats(s, dNull, d, sc(i - 1), nu(i - 1), dc(i - 1))) {
             sc(i) = sc(i - 1); dc(i) = dc(i - 1); nu(i) = nu(i - 1)
             i -= 1
           }

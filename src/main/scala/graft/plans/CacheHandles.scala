@@ -10,8 +10,8 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Several operators persist an intermediate that feeds the RETURNED
   * lazy DataFrame (minhash signature tables, shingle-set aggregates,
-  * the selection model's counts, range-scan children, memoized
-  * PageRank/CC results): the operator returns before any action runs,
+  * the selection model's counts, range-scan children, PageRank/CC
+  * results): the operator returns before any action runs,
   * so unpersisting inside it would kill the cache before first use.
   * Previously those blocks lived until LRU eviction or a blanket
   * `spark.catalog.clearCache()` — which a long-lived service can't

@@ -4,11 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared session for all suites (Test/fork gives one JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.builder(4, "graft-test").getOrCreate()
 }

@@ -69,4 +69,22 @@ class EditDistanceJoinSpec extends AnyFunSuite {
     assert(got == brute(rows, 1))
     assert(got == Set((1L, 2L, 1), (2L, 3L, 1)))
   }
+
+  test("candidatePairs fails loudly on a key table with a second band") {
+    // ids 1 and 2 share a bucket key but not a band: not a candidate
+    // pair, and the operator path (which shuffles bkey alone) must
+    // refuse the table rather than merge the bands
+    val keyed = Seq((1L, 0, 42L), (2L, 1, 42L), (3L, 0, 7L))
+      .toDF("id", "band", "bkey")
+    val e = intercept[Exception](EditDistanceJoin.candidatePairs(keyed, 100).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("band must be 0")), e.toString)
+    // deletionKeys' literal band folds the check out of the plan
+    val names = Seq((1L, "abcdef", 0), (2L, "abcdeg", 0)).toDF("id", "name", "blk")
+    val plan = EditDistanceJoin.candidatePairs(
+      EditDistanceJoin.deletionKeys(names, "id", "name", Seq("blk")), 100)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("raise_error"), plan)
+  }
 }

@@ -119,6 +119,19 @@ class Bm25TopKSpec extends AnyFunSpec {
       assertSame(fwd, qs, 1)
     }
 
+    it("ranks a NaN score above every number, as Spark's ordering does") {
+      val qs = new ScoreKernels.Bm25QuerySet(Array(7L), Array(Array(0)))
+      // the NaN doc has the largest id, so it reaches every heap after
+      // finite scores have filled it
+      val entries = ((0L until 200L).map(id => (id, 0, id.toDouble)) :+
+        ((1000L, 0, Double.NaN))).toDF("id", "idx", "c")
+      val got = viaOperator(entries, qs, 2)
+        .orderBy(col("score").desc, col("doc_id")).collect()
+      assert(got.map(_.getLong(1)).toSeq === Seq(1000L, 199L))
+      assert(got(0).getDouble(2).isNaN)
+      assertSame(entries, qs, 2)
+    }
+
     it("rejects a child with the wrong shape") {
       val qs = querySet(1, 1)
       val bad = Seq((1, 0L, 1.0)).toDF("id", "idx", "c") // id INT, idx LONG
