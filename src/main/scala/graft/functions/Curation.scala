@@ -53,10 +53,13 @@ object Curation {
     }
   }
 
-  /** The (t, nll) model table of a committed LM version dir. */
+  /** The (t, nll) model table of a committed LM version dir — one
+    * scan of the fixed schema, so a per-batch read runs no job.
+    */
   def readLmModel(spark: org.apache.spark.sql.SparkSession,
                   versionDir: String): DataFrame =
-    spark.read.parquet(s"$versionDir/vocab")
+    graft.operators.Versioned.scan(spark, Seq(s"$versionDir/vocab"),
+      Some(org.apache.spark.sql.types.StructType.fromDDL("t STRING, nll DOUBLE")))
 
   private def par(df: DataFrame): Int =
     df.sparkSession.sparkContext.defaultParallelism

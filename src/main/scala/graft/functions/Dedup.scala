@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** Deduplication operators for large text corpora.
   *
@@ -214,42 +215,48 @@ object Dedup {
       hashes.select(col("h")).distinct().write.parquet(s"$dir/grams")
     }
 
+  /** Stored schema of a whole-text md5 hash index (16-byte binary
+    * keys, the streaming funnel's exact-dedup index).
+    */
+  val Md5IndexSchema: StructType = StructType(Seq(StructField("h", BinaryType)))
+
+  /** Stored schema of a span-hash index (64-bit xxhash64 span keys,
+    * [[spanRows]]).
+    */
+  val SpanIndexSchema: StructType = StructType(Seq(StructField("h", LongType)))
+
   /** The hash set of a committed version dir: base + appended deltas
-    * (a SET — duplicates across crash branches are harmless, see
-    * [[readSpanIndex]]).
+    * as ONE parquet scan ([[graft.operators.Versioned.readTable]]) —
+    * no job at read time, one scan leaf whatever the delta count. A
+    * SET: duplicates across crash branches are harmless, see
+    * [[readSpanIndex]]. `schema` skips even the driver-side footer
+    * read when the key type is fixed ([[Md5IndexSchema]],
+    * [[SpanIndexSchema]]).
+    *
+    * `excludeTag`: a STREAMING replay must score against the
+    * pre-append view of the index, so deltas committed by an earlier
+    * run of the SAME micro-batch (tagged by the append) are left out
+    * and a crash between the append and the checkpoint commit
+    * re-scores identically instead of matching the batch's own hashes
+    * (a hash-only index cannot exclude "self" any other way).
     */
   def readHashIndex(spark: org.apache.spark.sql.SparkSession,
                     versionDir: String,
-                    excludeTag: Option[String] = None): DataFrame = {
-    val all = graft.operators.Versioned.listDeltas(spark, versionDir)
-    val deltas = excludeTag match {
-      case None => all
-      case Some(t) =>
-        // a STREAMING replay must score against the pre-append view of
-        // the index: deltas committed by an earlier run of the SAME
-        // micro-batch (tagged by appendHashIndex) are excluded, so a
-        // crash between the append and the checkpoint commit re-scores
-        // identically instead of matching the batch's own hashes (a
-        // hash-only index cannot exclude "self" any other way)
-        val conf = spark.sessionState.newHadoopConf()
-        all.filterNot { d =>
-          val p = new org.apache.hadoop.fs.Path(d, s"_TAG_$t")
-          p.getFileSystem(conf).exists(p)
-        }
-    }
-    deltas.foldLeft(spark.read.parquet(s"$versionDir/grams")) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$d/grams"))
-    }
-  }
+                    excludeTag: Option[String] = None,
+                    schema: Option[StructType] = None): DataFrame =
+    graft.operators.Versioned.readTable(spark, versionDir, "grams",
+      excludeTag, schema)
 
   /** Grow a hash index by O(batch): only hashes the index lacks land
     * as an atomic delta (empty delta → nothing committed, replays
-    * idempotent). The index side of the anti join is unbounded —
-    * merge, never a planner broadcast. The anti join always sees the
-    * FULL index (tags excluded nothing here), so a replayed append
-    * whose delta already landed commits nothing. `tag` marks the
-    * delta with the writer's batch identity for
-    * [[readHashIndex]]'s replay exclusion.
+    * idempotent). The index is read once, as one scan; its side of
+    * the anti join is unbounded — merge, never a planner broadcast.
+    * The anti join sees the FULL index (tags excluded nothing here),
+    * so a replayed append whose delta already landed commits nothing.
+    * `tag` marks the delta with the writer's batch identity for
+    * [[readHashIndex]]'s replay exclusion. Streaming faces that
+    * already probed the index derive their fresh hashes from that
+    * probe and commit through [[commitFreshHashes]] instead.
     */
   def appendHashIndex(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String, versionDir: String,
@@ -259,25 +266,36 @@ object Dedup {
       .join(idx.hint("merge"), Seq("h"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     try {
-      if (!fresh.isEmpty)
-        graft.operators.Versioned.commitDelta(spark, indexPath, versionDir) {
-          d =>
-            fresh.write.parquet(s"$d/grams")
-            tag.foreach { t =>
-              val p = new org.apache.hadoop.fs.Path(d, s"_TAG_$t")
-              val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-              fs.create(p, true).close()
-            }
-        }
+      if (!fresh.isEmpty) commitFreshHashes(spark, indexPath, versionDir, fresh, tag)
     } finally { fresh.unpersist(); () }
   }
 
+  /** Commit `fresh` — hashes already known to be absent from the
+    * index — as one atomic delta, with no second read of the index.
+    * With a `tag`, the commit is guarded by "no live delta carries
+    * this tag", evaluated under the writer lock
+    * ([[graft.operators.Versioned.commitDeltaIf]]): a streaming batch
+    * derives `fresh` from its scoring probe against the tag-excluded
+    * view ([[readHashIndex]]), so a replay recomputes the same fresh
+    * set, and the guard lands it exactly once. Returns the delta dir,
+    * or None when the guard skipped the commit.
+    */
+  def commitFreshHashes(spark: org.apache.spark.sql.SparkSession,
+                        indexPath: String, versionDir: String,
+                        fresh: DataFrame, tag: Option[String]): Option[String] =
+    graft.operators.Versioned.commitDeltaIf(spark, indexPath, versionDir)(
+      tag.forall(graft.operators.Versioned.taggedDelta(spark, versionDir, _).isEmpty)) {
+      d =>
+        fresh.select(col("h")).write.parquet(s"$d/grams")
+        tag.foreach(graft.operators.TagHeal.mark(spark, d, _))
+    }
+
   /** Fold a hash index's base + deltas into a fresh deltaless-as-
     * possible version — the compaction that keeps [[readHashIndex]]'s
-    * per-delta filesystem probe and per-delta parquet union from
-    * growing linearly with stream lifetime (one delta dir lands per
+    * per-delta filesystem probe and scan path list from growing
+    * linearly with stream lifetime (one delta dir lands per
     * micro-batch; a week-old ingest stream otherwise pays thousands
-    * of exists() calls and scan branches per trigger).
+    * of exists() calls and scanned dirs per trigger).
     *
     * Replay safety governs which deltas fold. A delta TAGGED
     * `qid_bN` supports [[readHashIndex]]'s streaming replay
@@ -290,7 +308,8 @@ object Dedup {
     * version verbatim (grams + tag files); every other delta's batch
     * is provably committed (a later batch id exists), so it folds
     * into the base and its tag files drop. Untagged deltas (batch
-    * appendHashIndex callers) always fold.
+    * appendHashIndex callers) always fold. The shared tag-carry
+    * fold is [[IndexDeltas.compactTabular]].
     *
     * Runs inside commitNew's locked callback (appends racing the
     * compaction are never dropped); readers mid-fold keep resolving
@@ -298,46 +317,8 @@ object Dedup {
     */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String): String =
-    graft.operators.Versioned.commitNew(spark, indexPath) { nv =>
-      val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-        .getOrElse(sys.error(s"no committed hash index at $indexPath"))
-      val conf = spark.sessionState.newHadoopConf()
-      def tagsOf(d: String): Seq[String] = {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).listStatus(p).toSeq
-          .map(_.getPath.getName).filter(_.startsWith("_TAG_"))
-      }
-      val deltas = graft.operators.Versioned.listDeltas(spark, vdir)
-        .map(d => d -> tagsOf(d))
-      // batch id per (query id) from tag names qid_bN; a delta is
-      // replay-live iff it holds the MAX batch id seen for its qid
-      def parsed(tags: Seq[String]): Seq[(String, Long)] =
-        tags.flatMap { t =>
-          val body = t.stripPrefix("_TAG_")
-          val i = body.lastIndexOf("_b")
-          if (i < 0) None
-          else body.drop(i + 2).toLongOption.map(b => (body.take(i), b))
-        }
-      val maxBatch = deltas.flatMap(d => parsed(d._2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-      val (carry, fold) = deltas.partition { case (_, tags) =>
-        parsed(tags).exists { case (qid, b) => maxBatch(qid) == b }
-      }
-      fold.map(_._1)
-        .foldLeft(spark.read.parquet(s"$vdir/grams")) { (acc, d) =>
-          acc.unionByName(spark.read.parquet(s"$d/grams"))
-        }
-        .distinct()
-        .write.parquet(s"$nv/grams")
-      carry.zipWithIndex.foreach { case ((d, tags), i) =>
-        val nd = s"$nv/delta_$i"
-        spark.read.parquet(s"$d/grams").write.parquet(s"$nd/grams")
-        val fs = new org.apache.hadoop.fs.Path(nd).getFileSystem(conf)
-        tags.foreach { t =>
-          fs.create(new org.apache.hadoop.fs.Path(nd, t), true).close()
-        }
-      }
-    }
+    IndexDeltas.compactTabular(spark, indexPath, Seq("grams"), "hash",
+      distinct = true)
 
   /** Build (or atomically refresh) the persisted span-hash index the
     * incremental/streaming span-dedup face probes: the distinct
@@ -350,14 +331,15 @@ object Dedup {
     writeHashIndex(spanRows(df, idCol, textCol, k), indexPath)
 
   /** The span-hash set of a committed version dir: base + every
-    * appended delta ([[readHashIndex]] — rows may repeat across crash
-    * branches; consumers treat the index as a SET). `excludeTag`
-    * passes through for streaming replay exclusion.
+    * appended delta as one scan of the fixed [[SpanIndexSchema]]
+    * ([[readHashIndex]] — rows may repeat across crash branches;
+    * consumers treat the index as a SET). `excludeTag` passes through
+    * for streaming replay exclusion.
     */
   def readSpanIndex(spark: org.apache.spark.sql.SparkSession,
                     versionDir: String,
                     excludeTag: Option[String] = None): DataFrame =
-    readHashIndex(spark, versionDir, excludeTag)
+    readHashIndex(spark, versionDir, excludeTag, Some(SpanIndexSchema))
 
   /** Incremental span-level dedup of one batch against a persisted
     * span-hash index: per-doc (idCol, n_spans, n_dup, dup_frac) where
@@ -376,24 +358,43 @@ object Dedup {
                          textCol: String, k: Int): DataFrame =
     spanDedupIncrementSpans(spanRows(batch, idCol, textCol, k), index, idCol)
 
-  /** [[spanDedupIncrement]] over PRECOMPUTED (id, h) span rows — the
-    * streaming faces compute the batch's spans once (persisted) and
-    * feed both this scorer and the index append, instead of running
-    * the tokenize → explode → window chain twice per micro-batch.
+  /** [[spanDedupIncrement]] over PRECOMPUTED (id, h) span rows:
+    * [[spanScores]] of the [[spanProbe]].
     */
   def spanDedupIncrementSpans(spanRows: DataFrame, index: DataFrame,
-                              idCol: String): DataFrame = {
+                              idCol: String): DataFrame =
+    spanScores(spanProbe(spanRows, index), idCol)
+
+  /** The span probe of one batch against an index: one row per
+    * distinct (id, h) span, `nd` = within-batch holder count when
+    * ≥ 2 (else null), `seen` = 1 when the index holds h (else null).
+    * The streaming faces persist it and derive BOTH the per-doc
+    * scores ([[spanScores]]) and the index append
+    * ([[unmatchedSpans]]) from it, so the index is read once per
+    * micro-batch.
+    */
+  def spanProbe(spanRows: DataFrame, index: DataFrame): DataFrame = {
     val spans = spanRows.select(col("id"), col("h")).dropDuplicates("id", "h")
     val withDf = joinKeyStats(spans, "h",
       Seq(count(lit(1)).as("nd")), col("nd") >= 2, "left")
     val idx = index.select(col("h")).distinct().withColumn("seen", lit(1))
     withDf.join(idx.hint("merge"), Seq("h"), "left")
-      .groupBy(col("id"))
+  }
+
+  /** Per-doc (idCol, n_spans, n_dup, dup_frac) of a [[spanProbe]]. */
+  def spanScores(probe: DataFrame, idCol: String): DataFrame =
+    probe.groupBy(col("id"))
       .agg(count(lit(1)).as("n_spans"),
         count(when(col("nd").isNotNull || col("seen").isNotNull, 1)).as("n_dup"))
       .select(col("id").as(idCol), col("n_spans"), col("n_dup"),
         (col("n_dup") / col("n_spans")).as("dup_frac"))
-  }
+
+  /** The distinct span hashes of a [[spanProbe]] the index does not
+    * hold — exactly the anti join of the batch's spans against the
+    * probed view, i.e. the batch's O(batch) index append.
+    */
+  def unmatchedSpans(probe: DataFrame): DataFrame =
+    probe.filter(col("seen").isNull).select(col("h")).distinct()
 
   /** One row per k-token shingle, carrying only the shingle's 64-bit
     * hash: tokens are exploded and hashed together with their k-1
@@ -758,16 +759,17 @@ object Dedup {
     // Round 19 wave 5: the df band and the per-h holder lists come
     // from ONE groupBy(h) over ONE evaluation of the shingle table —
     // exact count(1) + [[graft.plans.BoundedCollectLong]] capped at
-    // maxDf + 1, then the df filter. The former shape computed df via
+    // maxDf (a group over the cap evaluates to null, never to a
+    // truncated array), then the df filter. The former shape computed df via
     // joinKeyStats (a stats aggregate + a merge SEMI-JOIN with its two
     // sort legs, over a persisted+eagerly-counted sh cache because the
     // two references ran as concurrent AQE stages) and only then
     // collected the surviving holders in a SECOND groupBy. The bounded
     // collect removes the scale hazard that forced the two-pass shape:
     // a boilerplate shingle held by the whole corpus buffers at most
-    // maxDf + 1 longs per aggregation buffer (never a corpus-sized
-    // array), while every group that passes _df ≤ maxDf is strictly
-    // under the cap and therefore collected COMPLETELY — the (h → id
+    // maxDf longs per aggregation buffer (never a corpus-sized
+    // array), while every group that passes _df ≤ maxDf is within
+    // the cap and therefore collected COMPLETELY — the (h → id
     // multiset) map is identical to the semi-join + collect_list form,
     // and the single consumer means the persist + count materialization
     // pass disappears too. Pair semantics unchanged from the wave-1
@@ -779,7 +781,7 @@ object Dedup {
     val buckets =
       if (sh.schema("id").dataType == org.apache.spark.sql.types.LongType)
         sh.groupBy("h").agg(count(lit(1)).as("_df"),
-            graft.plans.BoundedCollect.boundedCollectLong(col("id"), maxDf + 1).as("ms"))
+            graft.plans.BoundedCollect.boundedCollectLong(col("id"), math.max(maxDf, 1)).as("ms"))
           .filter(col("_df").between(minDf, maxDf))
           .select(col("h"), col("ms"))
       else {

@@ -68,10 +68,7 @@ object HealthProfile {
     * over base + deltas — KBs of input per delta, never corpus data.
     */
   def readHist(spark: SparkSession, versionDir: String): DataFrame =
-    graft.operators.Versioned.listDeltas(spark, versionDir)
-      .foldLeft(spark.read.parquet(s"$versionDir/hist")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/hist"))
-      }
+    graft.operators.Versioned.readTable(spark, versionDir, "hist")
       .groupBy("source", "n_chars").agg(sum("c").as("c"))
 
   /** Exact two-sample KS per source vs rest-of-corpus from a

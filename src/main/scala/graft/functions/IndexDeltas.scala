@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Shared delta plumbing for the *tabular* signature-index families
-  * (MinhashIndex, SimhashIndex): a committed version dir holding N
-  * named parquet tables, deltas carrying the same tables, streaming
-  * tags as `_TAG_<qid>_b<batch>` marker files.
+/** Shared compaction for the tabular index families (MinhashIndex,
+  * SimhashIndex, the hash indexes of [[Dedup]]): a committed version
+  * dir holding N named parquet tables, deltas carrying the same
+  * tables, streaming tags as `_TAG_<qid>_b<batch>` marker files.
+  * Reads go through [[graft.operators.Versioned.readTable]].
   *
   * Extracted (round 18) from MinhashIndex verbatim so the simhash
   * family reuses the compaction/tag-replay logic MinhashIndexSpec
@@ -13,51 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[functions] object IndexDeltas {
 
-  /** Deltas of `versionDir`, minus those tagged `excludeTag` —
-    * streaming replay must score against the PRE-append view of the
-    * index (the Dedup.readHashIndex convention): deltas committed by
-    * an earlier run of the SAME micro-batch are excluded so a crash
-    * between append and checkpoint commit re-scores identically
-    * instead of matching the batch's own signatures.
-    */
-  def liveDeltas(spark: SparkSession, versionDir: String,
-                 excludeTag: Option[String]): Seq[String] = {
-    val all = graft.operators.Versioned.listDeltas(spark, versionDir)
-    excludeTag match {
-      case None => all
-      case Some(t) =>
-        val conf = spark.sessionState.newHadoopConf()
-        all.filterNot { d =>
-          val p = new org.apache.hadoop.fs.Path(d, s"_TAG_$t")
-          p.getFileSystem(conf).exists(p)
-        }
-    }
-  }
-
-  /** Table `sub` of a committed version: base + live deltas. */
-  def fold(spark: SparkSession, versionDir: String, sub: String,
-           excludeTag: Option[String]): DataFrame =
-    liveDeltas(spark, versionDir, excludeTag)
-      .foldLeft(spark.read.parquet(s"$versionDir/$sub")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/$sub"))
-      }
-
-  /** Drop the `_TAG_<tag>` marker file into a delta dir. */
-  def writeTag(spark: SparkSession, deltaDir: String, tag: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(deltaDir, s"_TAG_$tag")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(p, true).close()
-  }
-
   /** Fold deltas into a fresh base version. Replay safety follows
     * [[Dedup.compactHashIndex]]: for each streaming query id, the
     * HIGHEST-batch tagged delta is the only one that can still
     * replay — it carries over verbatim (tables + tag files); every
     * other delta folds. Untagged (batch-append) deltas always fold.
+    * `distinct` de-duplicates each folded table (hash SETS).
     * Runs under commitNew's lock; returns the new version dir.
     */
   def compactTabular(spark: SparkSession, indexPath: String,
-                     subs: Seq[String], what: String): String =
+                     subs: Seq[String], what: String,
+                     distinct: Boolean = false): String =
     graft.operators.Versioned.commitNew(spark, indexPath) { nv =>
       val vdir = graft.operators.Versioned.resolve(spark, indexPath)
         .getOrElse(sys.error(s"no committed $what index at $indexPath"))
@@ -82,16 +49,15 @@ private[functions] object IndexDeltas {
         parsed(tags).exists { case (qid, b) => maxBatch(qid) == b }
       }
       subs.foreach { sub =>
-        foldAway.map(_._1)
-          .foldLeft(spark.read.parquet(s"$vdir/$sub")) { (acc, d) =>
-            acc.unionByName(spark.read.parquet(s"$d/$sub"))
-          }
-          .write.parquet(s"$nv/$sub")
+        val folded = graft.operators.Versioned.scan(spark,
+          (vdir +: foldAway.map(_._1)).map(d => s"$d/$sub"))
+        (if (distinct) folded.distinct() else folded).write.parquet(s"$nv/$sub")
       }
       carry.zipWithIndex.foreach { case ((d, tags), i) =>
         val nd = s"$nv/delta_$i"
         subs.foreach { sub =>
-          spark.read.parquet(s"$d/$sub").write.parquet(s"$nd/$sub")
+          graft.operators.Versioned.scan(spark, Seq(s"$d/$sub"))
+            .write.parquet(s"$nd/$sub")
         }
         val fs = new org.apache.hadoop.fs.Path(nd).getFileSystem(conf)
         tags.foreach { t =>

@@ -342,17 +342,16 @@ object Ivf {
       .map(_.getSeq[Double](1).toArray)
 
   /** The full cells table of a resolved version: base ∪ committed
-    * appended deltas. Filters on `ivf_cell` push through the union
-    * into every branch's scan, so partition pruning survives — each
-    * delta is partitioned by cell exactly like the base. Plan size
-    * grows linearly in delta count; [[compactIndex]] bounds it.
+    * appended deltas, one typed scan per dir (no schema-inference
+    * job; see [[graft.operators.Versioned.scan]] for why partitioned
+    * tables keep a branch per dir). Filters on `ivf_cell` push into
+    * every branch's scan, so partition pruning survives — each delta
+    * is partitioned by cell exactly like the base. Plan size grows
+    * linearly in delta count; [[compactIndex]] bounds it.
     */
   private[functions] def readCellsFrom(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.operators.Versioned.listDeltas(spark, dir)
-      .foldLeft(spark.read.parquet(s"$dir/cells")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/cells"))
-      }
+    graft.operators.Versioned.readTable(spark, dir, "cells")
 
   /** IVF top-k over a prebuilt index at `path` — no training, no
     * assignment pass; the cells scan (base + deltas) is pruned to the

@@ -104,12 +104,8 @@ object LinkageIndex {
   }
 
   private def component(spark: SparkSession, versionDir: String,
-                        sub: String): DataFrame = {
-    val deltas = graft.operators.Versioned.listDeltas(spark, versionDir)
-    deltas.foldLeft(spark.read.parquet(s"$versionDir/$sub")) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$d/$sub"))
-    }
-  }
+                        sub: String): DataFrame =
+    graft.operators.Versioned.readTable(spark, versionDir, sub)
 
   /** The served result: every verified (id_a, id_b, dist) pair, base
     * build plus appended deltas — identical to

@@ -72,16 +72,16 @@ object MinhashIndex {
 
   /** Signature table of a committed version (base + deltas).
     * `excludeTag` is the streaming-replay exclusion — see
-    * [[IndexDeltas.liveDeltas]].
+    * [[graft.operators.Versioned.liveDeltas]].
     */
   def readSigs(spark: SparkSession, versionDir: String,
                excludeTag: Option[String] = None): DataFrame =
-    IndexDeltas.fold(spark, versionDir, "sigs", excludeTag)
+    graft.operators.Versioned.readTable(spark, versionDir, "sigs", excludeTag)
 
   /** Band table of a committed version (base + deltas). */
   def readBands(spark: SparkSession, versionDir: String,
                 excludeTag: Option[String] = None): DataFrame =
-    IndexDeltas.fold(spark, versionDir, "bands", excludeTag)
+    graft.operators.Versioned.readTable(spark, versionDir, "bands", excludeTag)
 
   /** O(batch) append: signatures + bands for the ids of `docs` not
     * already indexed land as one delta under the CURRENT version —
@@ -105,7 +105,7 @@ object MinhashIndex {
         graft.operators.Versioned.commitDelta(spark, indexPath, versionDir) { d =>
           fresh.write.parquet(s"$d/sigs")
           bandRows(fresh).write.parquet(s"$d/bands")
-          tag.foreach(IndexDeltas.writeTag(spark, d, _))
+          tag.foreach(graft.operators.TagHeal.mark(spark, d, _))
         }
     } finally { fresh.unpersist(); () }
   }

@@ -263,23 +263,16 @@ object Pq {
   }
 
   /** Codes table of a resolved version: base ∪ appended deltas, cell
-    * partition pruning intact through the union (see
-    * [[Ivf.readCellsFrom]] for the shape rationale).
+    * partition pruning intact (see [[Ivf.readCellsFrom]]).
     */
   private def readCodesFrom(spark: org.apache.spark.sql.SparkSession,
                             dir: String): DataFrame =
-    graft.operators.Versioned.listDeltas(spark, dir)
-      .foldLeft(spark.read.parquet(s"$dir/codes")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/codes"))
-      }
+    graft.operators.Versioned.readTable(spark, dir, "codes")
 
   /** Rerank-vectors table of a resolved version: base ∪ deltas. */
   private def readVectorsFrom(spark: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame =
-    graft.operators.Versioned.listDeltas(spark, dir)
-      .foldLeft(spark.read.parquet(s"$dir/vectors")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/vectors"))
-      }
+    graft.operators.Versioned.readTable(spark, dir, "vectors")
 
   /** Reload a persisted index's codebooks bit-exactly. */
   def readCodebooks(spark: org.apache.spark.sql.SparkSession,

@@ -406,17 +406,29 @@ object Retrieval {
     else stats.select(col("n"),
       round(col("avgdl") * col("n")).cast("long").as("sdl"))
 
-  /** Every indexed doc id (base + deltas). Pre-`ids/` layouts fall
-    * back to the tf-derived id set — there zero-token docs are
-    * invisible to append dedup (the defect `ids/` exists to fix).
+  /** Every indexed doc id (base + deltas, the deltas as one scan).
+    * Pre-`ids/` layouts fall back to the tf-derived id set — there
+    * zero-token docs are invisible to append dedup (the defect `ids/`
+    * exists to fix).
     */
   private def indexedIds(spark: org.apache.spark.sql.SparkSession,
                          versionDir: String, deltas: Seq[String]): DataFrame = {
-    val base = scala.util.Try(spark.read.parquet(s"$versionDir/ids"))
+    val base = scala.util.Try(graft.operators.Versioned.scan(spark, Seq(s"$versionDir/ids")))
       .getOrElse(spark.read.parquet(s"$versionDir/tf").select("id").distinct())
-    deltas.foldLeft(base) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$d/ids"))
-    }
+    if (deltas.isEmpty) base
+    else base.unionByName(graft.operators.Versioned.scan(spark, deltas.map(d => s"$d/ids")))
+  }
+
+  /** The (n, sdl) stats partials of a version: the base (legacy
+    * layouts converted, see [[statsAsPartial]]) plus the deltas' as
+    * one scan.
+    */
+  private def statsPartials(spark: org.apache.spark.sql.SparkSession,
+                            versionDir: String, deltas: Seq[String]): DataFrame = {
+    val base = statsAsPartial(
+      graft.operators.Versioned.scan(spark, Seq(s"$versionDir/stats")))
+    if (deltas.isEmpty) base
+    else base.unionByName(graft.operators.Versioned.scan(spark, deltas.map(d => s"$d/stats")))
   }
 
   /** The committed index read-side: base + `delta_N` appends merged
@@ -481,10 +493,7 @@ object Retrieval {
       else deltas.foldLeft(df0)((acc, d) => acc.unionByName(
           prune(readTolerant(spark, s"$d/df", dfSchema)), allowMissingColumns = true))
         .groupBy("th").agg(sum("df").as("df"))
-    val stats = deltas
-      .foldLeft(statsAsPartial(spark.read.parquet(s"$versionDir/stats"))) {
-        (acc, d) => acc.unionByName(spark.read.parquet(s"$d/stats"))
-      }
+    val stats = statsPartials(spark, versionDir, deltas)
       .agg(sum("n").as("n"),
         (sum("sdl").cast("double") / sum("n")).as("avgdl"))
     (tf, df, stats)
@@ -577,10 +586,7 @@ object Retrieval {
       writeTfBucketed(tf, s"$dir/tf", idBuckets)
       writeBucketed(df.drop("pb"), s"$dir/df")
       indexedIds(spark, vdir, deltas).write.parquet(s"$dir/ids")
-      deltas
-        .foldLeft(statsAsPartial(spark.read.parquet(s"$vdir/stats"))) {
-          (acc, d) => acc.unionByName(spark.read.parquet(s"$d/stats"))
-        }
+      statsPartials(spark, vdir, deltas)
         .agg(sum("n").as("n"), sum("sdl").as("sdl"))
         .write.parquet(s"$dir/stats")
     }

@@ -188,11 +188,7 @@ object Selection {
       .getOrElse(throw new IllegalStateException(
         s"no committed importance model at $modelPath — " +
           "build one with writeImportanceModel first"))
-    val deltas = graft.operators.Versioned.listDeltas(spark, vdir)
-    val trained = deltas.foldLeft(spark.read.parquet(s"$vdir/ids")) {
-      (acc, d) => acc.unionByName(spark.read.parquet(s"$d/ids"))
-    }
-    val hits = trained
+    val hits = graft.operators.Versioned.readTable(spark, vdir, "ids")
       .join(broadcast(newDocs.select(col(idCol).as("id"))), Seq("id"), "left_semi")
       .distinct()
     val fresh = newDocs
@@ -225,10 +221,7 @@ object Selection {
       (spark.read.parquet(s"$versionDir/lr"),
         spark.read.parquet(s"$versionDir/defaults"))
     else {
-      val merged = deltas
-        .foldLeft(spark.read.parquet(s"$versionDir/counts")) {
-          (acc, d) => acc.unionByName(spark.read.parquet(s"$d/counts"))
-        }
+      val merged = graft.operators.Versioned.readTable(spark, versionDir, "counts")
         .groupBy("h").agg(sum("ct").as("ct"), sum("cr").as("cr"))
       lrFromCounts(merged, storedBuckets(spark, versionDir))
     }
@@ -246,16 +239,11 @@ object Selection {
       val vdir = graft.operators.Versioned.resolve(spark, modelPath)
         .getOrElse(throw new IllegalStateException(
           s"no committed importance model at $modelPath"))
-      val deltas = graft.operators.Versioned.listDeltas(spark, vdir)
-      deltas.foldLeft(spark.read.parquet(s"$vdir/ids")) {
-        (acc, d) => acc.unionByName(spark.read.parquet(s"$d/ids"))
-      }.write.parquet(s"$dir/ids")
+      graft.operators.Versioned.readTable(spark, vdir, "ids")
+        .write.parquet(s"$dir/ids")
       // fold once to disk; the lr/defaults caches then derive from the
       // WRITTEN counts parquet (plain reads, no re-aggregation)
-      deltas
-        .foldLeft(spark.read.parquet(s"$vdir/counts")) {
-          (acc, d) => acc.unionByName(spark.read.parquet(s"$d/counts"))
-        }
+      graft.operators.Versioned.readTable(spark, vdir, "counts")
         .groupBy("h").agg(sum("ct").as("ct"), sum("cr").as("cr"))
         .write.parquet(s"$dir/counts")
       val (lr, defaults) = lrFromCounts(spark.read.parquet(s"$dir/counts"),

@@ -74,14 +74,11 @@ object Semdedup {
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
 
   /** Member table of a resolved version: base ∪ committed deltas.
-    * Cluster filters push through the union into every branch's
-    * pruned scan ([[Ivf.readCellsFrom]]'s property).
+    * Cluster filters push into every dir's pruned scan
+    * ([[Ivf.readCellsFrom]]'s property).
     */
   def readMembersFrom(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Versioned.listDeltas(spark, dir)
-      .foldLeft(spark.read.parquet(s"$dir/members")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/members"))
-      }
+    graft.operators.Versioned.readTable(spark, dir, "members")
 
   /** Deduplicate one batch against the index: (idCol, cluster,
     * dropped) where dropped ⇔ some SMALLER-id vector — indexed or

@@ -56,12 +56,8 @@ object SimJoinIndex {
   }
 
   private def component(spark: SparkSession, versionDir: String,
-                        sub: String): DataFrame = {
-    val deltas = graft.operators.Versioned.listDeltas(spark, versionDir)
-    deltas.foldLeft(spark.read.parquet(s"$versionDir/$sub")) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$d/$sub"))
-    }
-  }
+                        sub: String): DataFrame =
+    graft.operators.Versioned.readTable(spark, versionDir, sub)
 
   /** Prefix postings (h, id, n) for a (id, h) shingle table under the
     * order Ω given by `dfs` (h, kdf; shingles absent from dfs rank

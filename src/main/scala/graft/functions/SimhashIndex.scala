@@ -83,16 +83,16 @@ object SimhashIndex {
 
   /** Simhash table of a committed version (base + deltas).
     * `excludeTag` is the streaming-replay exclusion — see
-    * [[IndexDeltas.liveDeltas]].
+    * [[graft.operators.Versioned.liveDeltas]].
     */
   def readSims(spark: SparkSession, versionDir: String,
                excludeTag: Option[String] = None): DataFrame =
-    IndexDeltas.fold(spark, versionDir, "sims", excludeTag)
+    graft.operators.Versioned.readTable(spark, versionDir, "sims", excludeTag)
 
   /** Band table of a committed version (base + deltas). */
   def readBands(spark: SparkSession, versionDir: String,
                 excludeTag: Option[String] = None): DataFrame =
-    IndexDeltas.fold(spark, versionDir, "sbands", excludeTag)
+    graft.operators.Versioned.readTable(spark, versionDir, "sbands", excludeTag)
 
   /** O(batch) append: simhashes + bands for the ids of `docs` not
     * already indexed land as one delta under the CURRENT version —
@@ -115,7 +115,7 @@ object SimhashIndex {
         graft.operators.Versioned.commitDelta(spark, indexPath, versionDir) { d =>
           fresh.write.parquet(s"$d/sims")
           bandRows(fresh).write.parquet(s"$d/sbands")
-          tag.foreach(IndexDeltas.writeTag(spark, d, _))
+          tag.foreach(graft.operators.TagHeal.mark(spark, d, _))
         }
     } finally { fresh.unpersist(); () }
   }

@@ -93,15 +93,12 @@ object SketchProfile {
     */
   def readProfile(spark: SparkSession, versionDir: String): DataFrame = {
     import graft.plans.KllQuantiles._
-    val parts = graft.operators.Versioned.listDeltas(spark, versionDir)
-      .foldLeft(spark.read.parquet(s"$versionDir/profile")) { (acc, d) =>
-        acc.unionByName(spark.read.parquet(s"$d/profile"))
-      }
-    parts.groupBy("source").agg(
-      hll_union_agg(col("hll")).as("hll"),
-      kll_merge_agg(col("kll")).as("kll"),
-      sum("n_docs").as("n_docs"),
-      sum("n_tokens").as("n_tokens"))
+    graft.operators.Versioned.readTable(spark, versionDir, "profile")
+      .groupBy("source").agg(
+        hll_union_agg(col("hll")).as("hll"),
+        kll_merge_agg(col("kll")).as("kll"),
+        sum("n_docs").as("n_docs"),
+        sum("n_tokens").as("n_tokens"))
   }
 
   /** Human-facing estimates from the folded profile. */

@@ -52,10 +52,7 @@ object TagHeal {
   def deltaByTag(spark: SparkSession, versionDir: String, tag: String,
                  what: String): Option[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    Versioned.listDeltas(spark, versionDir).find { d =>
-      val p = new org.apache.hadoop.fs.Path(d, s"_TAG_$tag")
-      p.getFileSystem(conf).exists(p)
-    }.orElse {
+    Versioned.taggedDelta(spark, versionDir, tag).orElse {
       val td = new org.apache.hadoop.fs.Path(versionDir, "tagdeltas")
       val fs = td.getFileSystem(conf)
       val hit =

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned directory layout for multi-file artifacts (indexes,
   * compacted tables) that must stay readable while being rebuilt.
@@ -175,8 +176,8 @@ object Versioned {
     * per append — the defect this exists to fix) or chain to its
     * predecessor, and then [[prune]] deleting an old version would
     * sever every later version's base. Readers resolve the version
-    * once and union base + renamed deltas; [[prune]]'s keep-2 window
-    * covers them across a compaction exactly as before.
+    * once and scan base + renamed deltas ([[readTable]]); [[prune]]'s
+    * keep-2 window covers them across a compaction exactly as before.
     *
     * Takes the same root `_LOCK` as [[commitNew]], AND re-resolves the
     * root under that lock requiring `versionDir` to still be the
@@ -269,6 +270,124 @@ object Versioned {
         else None
       }
       .sortBy(_._1).map(_._2)
+  }
+
+  /** Whether delta dir `delta` carries the `_TAG_<tag>` marker a
+    * streaming writer drops to record its (query, batch) identity.
+    */
+  private def carriesTag(f: FileSystem, delta: String, tag: String): Boolean =
+    f.exists(new Path(delta, s"_TAG_$tag"))
+
+  /** The committed deltas of a version dir minus those tagged
+    * `excludeTag`. A streaming replay must score against the
+    * PRE-append view of an index: deltas committed by an earlier run
+    * of the SAME micro-batch are left out, so a crash between an
+    * append and the checkpoint commit re-scores identically instead
+    * of matching the batch's own rows.
+    */
+  def liveDeltas(spark: SparkSession, versionDir: String,
+                 excludeTag: Option[String] = None): Seq[String] = {
+    val all = listDeltas(spark, versionDir)
+    excludeTag.fold(all) { t =>
+      val f = fs(spark, new Path(versionDir))
+      all.filterNot(carriesTag(f, _, t))
+    }
+  }
+
+  /** The committed delta of `versionDir` carrying `tag`, if any. As
+    * a guard ("no live delta carries this batch's tag") it protects an
+    * append derived from a tag-excluded read — pass it to
+    * [[commitDeltaIf]] so it is evaluated under the writer lock.
+    */
+  def taggedDelta(spark: SparkSession, versionDir: String, tag: String): Option[String] = {
+    val f = fs(spark, new Path(versionDir))
+    listDeltas(spark, versionDir).find(carriesTag(f, _, tag))
+  }
+
+  /** Table `sub` of a committed version — the base plus every live
+    * delta (see [[liveDeltas]]) — as ONE parquet scan ([[scan]]): no
+    * job runs at read time, and the plan keeps one file-scan leaf
+    * whatever the delta count, so its shape (and its generated code)
+    * stays the same from one micro-batch to the next.
+    */
+  def readTable(spark: SparkSession, versionDir: String, sub: String,
+                excludeTag: Option[String] = None,
+                schema: Option[StructType] = None): DataFrame =
+    scan(spark, (versionDir +: liveDeltas(spark, versionDir, excludeTag))
+      .map(d => s"$d/$sub"), schema)
+
+  /** One `spark.read.schema(s).parquet(dirs: _*)` scan over parquet
+    * dirs of one table. `schema` is the caller's when the type is
+    * fixed (flat tables only); otherwise it comes from ONE parquet
+    * footer read on the driver (the first data file found, in `dirs`
+    * order), never from Spark's inference job. Files are read by
+    * column NAME, so a dir written with another column order still
+    * lines up. Listing stays on the driver while `dirs` is at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) —
+    * compaction keeps delta counts under it.
+    *
+    * A PARTITIONED table (`col=value` subdirs) cannot be one scan:
+    * Spark's partition discovery needs a single base path, and each
+    * dir is its own. It reads as a union of per-dir scans of the
+    * footer schema — still no job at read time. Dirs with no data
+    * file at all fall back to plain inference (which fails as before
+    * on an all-empty table).
+    */
+  def scan(spark: SparkSession, dirs: Seq[String],
+           schema: Option[StructType] = None): DataFrame = {
+    def read(s: StructType, ds: Seq[String]) = spark.read.schema(s).parquet(ds: _*)
+    schema match {
+      case Some(s) => read(s, dirs)
+      case None => firstDataFile(spark, dirs) match {
+        case None => spark.read.parquet(dirs: _*)
+        case Some((file, partitioned)) =>
+          val s = footerSchema(spark, file)
+          if (!partitioned) read(s, dirs)
+          else dirs.map(d => read(s, Seq(d))).reduce(_ unionByName _)
+      }
+    }
+  }
+
+  /** The first parquet data file under `dirs` (recursively, hidden
+    * names skipped), and whether it sits in a `col=value` partition
+    * dir.
+    */
+  private def firstDataFile(spark: SparkSession,
+                            dirs: Seq[String]): Option[(Path, Boolean)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    // Spark's hidden-path rule (InMemoryFileIndex): `_x=v` partition
+    // dirs stay visible
+    def visible(p: Path): Boolean = {
+      val n = p.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
+    }
+    dirs.iterator.map(new Path(_)).flatMap { d =>
+      val f = d.getFileSystem(conf)
+      val root = f.makeQualified(d)
+      if (!f.exists(root)) Iterator.empty
+      else {
+        val it = f.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).flatMap { st =>
+          val below = Iterator.iterate(st.getPath)(_.getParent)
+            .takeWhile(q => q != null && q != root).toSeq
+          if (below.forall(visible))
+            Some((st.getPath, below.tail.exists(_.getName.contains("="))))
+          else None
+        }
+      }
+    }.nextOption()
+  }
+
+  /** The Spark schema stored in one parquet file's footer. */
+  private def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    import org.apache.spark.sql.execution.datasources.parquet._
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Delete all but the newest `keep` committed versions plus any

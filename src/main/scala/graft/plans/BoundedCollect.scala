@@ -16,21 +16,23 @@ import scala.collection.mutable.ArrayBuffer
   * the whole corpus) buffers at most `limit` longs per aggregation
   * buffer instead of a corpus-sized array — the exact unbounded-
   * collect hazard the former stats-then-semi-join two-pass shape
-  * existed to avoid. Callers size `limit` ABOVE their survivor bound
-  * (e.g. maxDf + 1): any group whose true cardinality is ≤ limit − 1
-  * collects COMPLETELY (partials can only under-fill; merge
-  * concatenates then re-caps), so for groups that pass a
-  * `count ≤ limit − 1` filter the result is element-equal to
+  * existed to avoid.
+  *
+  * Self-guarding: the buffer also keeps the exact count of non-null
+  * inputs seen, and a group that saw MORE than `limit` values
+  * evaluates to null, never to a truncated array. A group of at most
+  * `limit` values collects COMPLETELY (partials can only under-fill;
+  * merge concatenates then re-caps) and is element-equal to
   * collect_list up to order — and the collect_list order was never
   * deterministic to begin with (ArrayPairsSpec's longPairs consumers
-  * are order-insensitive by value). Groups OVER the cap return a
-  * truncated array; pair the aggregate with an exact count() in the
-  * same groupBy and filter on that.
+  * are order-insensitive by value). Callers no longer have to pair
+  * the aggregate with an exact count filter for correctness.
   */
 case class BoundedCollectLong(child: Expression, limit: Int,
                               mutableAggBufferOffset: Int = 0,
                               inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[Long]] {
+    extends TypedImperativeAggregate[BoundedCollect.Buffer] {
+  import BoundedCollect.Buffer
   require(limit > 0, "bounded_collect_long limit must be positive")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -40,42 +42,47 @@ case class BoundedCollectLong(child: Expression, limit: Int,
   }
   override def children: Seq[Expression] = child :: Nil
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
+  override def nullable: Boolean = true
   override def prettyName: String = "bounded_collect_long"
 
-  override def createAggregationBuffer(): ArrayBuffer[Long] = ArrayBuffer.empty
+  override def createAggregationBuffer(): Buffer = new Buffer
 
-  override def update(buffer: ArrayBuffer[Long], input: InternalRow): ArrayBuffer[Long] = {
-    if (buffer.length < limit) {
-      val v = child.eval(input)
-      if (v != null) buffer += v.asInstanceOf[Long]
+  override def update(buffer: Buffer, input: InternalRow): Buffer = {
+    val v = child.eval(input)
+    if (v != null) {
+      buffer.seen += 1
+      if (buffer.elems.length < limit) buffer.elems += v.asInstanceOf[Long]
     }
     buffer
   }
 
-  override def merge(buffer: ArrayBuffer[Long], other: ArrayBuffer[Long]): ArrayBuffer[Long] = {
+  override def merge(buffer: Buffer, other: Buffer): Buffer = {
+    buffer.seen += other.seen
     var i = 0
-    while (buffer.length < limit && i < other.length) {
-      buffer += other(i)
+    while (buffer.elems.length < limit && i < other.elems.length) {
+      buffer.elems += other.elems(i)
       i += 1
     }
     buffer
   }
 
-  override def eval(buffer: ArrayBuffer[Long]): Any =
-    new GenericArrayData(buffer.toArray)
+  override def eval(buffer: Buffer): Any =
+    if (buffer.seen > limit) null
+    else new GenericArrayData(buffer.elems.toArray)
 
-  override def serialize(buffer: ArrayBuffer[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * buffer.length)
+  override def serialize(buffer: Buffer): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 * (buffer.elems.length + 1))
+    bb.putLong(buffer.seen)
     var i = 0
-    while (i < buffer.length) { bb.putLong(buffer(i)); i += 1 }
+    while (i < buffer.elems.length) { bb.putLong(buffer.elems(i)); i += 1 }
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Long] = {
+  override def deserialize(bytes: Array[Byte]): Buffer = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
-    val out = new ArrayBuffer[Long](bytes.length / 8)
-    while (bb.remaining() >= 8) out += bb.getLong()
+    val out = new Buffer
+    out.seen = bb.getLong()
+    while (bb.remaining() >= 8) out.elems += bb.getLong()
     out
   }
 
@@ -89,6 +96,14 @@ case class BoundedCollectLong(child: Expression, limit: Int,
 }
 
 object BoundedCollect {
+  /** Aggregation buffer: the exact non-null count and at most `limit`
+    * of the values.
+    */
+  final class Buffer {
+    var seen: Long = 0L
+    val elems: ArrayBuffer[Long] = ArrayBuffer.empty
+  }
+
   def boundedCollectLong(child: Column, limit: Int): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       BoundedCollectLong(

@@ -491,14 +491,23 @@ object Streams {
     * span-granularity sibling of the exact-dedup ingest loop: ingest
     * scores against history, history grows by the batch.
     *
+    * One pass per micro-batch: the index is read ONCE, as one scan
+    * ([[graft.functions.Dedup.readSpanIndex]]), by the persisted span
+    * probe ([[graft.functions.Dedup.spanProbe]]); the scores and the
+    * append (the probe's spans with no index match) both derive from
+    * it, so the append never re-reads the index.
+    *
     * Exactly-once: output goes through the same `batch_id=N`
-    * dynamic-partition overwrite as [[decontamIngest]], and the index
-    * append is SELF-HEALING on checkpoint replay — the replayed
-    * batch's spans are already in the index, so the anti-join delta
-    * is empty and nothing is appended twice. Source-level REdelivery
-    * of a document (new batch_id) scores it against an index that
-    * already holds its spans → dup_frac 1.0, which is exactly the
-    * keep-first verdict incremental dedup gives re-ingested content.
+    * dynamic-partition overwrite as [[decontamIngest]]. The probe
+    * reads the PRE-append view (this batch's own tagged delta
+    * excluded), so a checkpoint replay re-scores identically, and the
+    * append commits only if no live delta carries this batch's tag —
+    * checked under the writer lock
+    * ([[graft.functions.Dedup.commitFreshHashes]]) — so nothing is
+    * appended twice. Source-level REdelivery of a document (new
+    * batch_id) scores it against an index that already holds its
+    * spans → dup_frac 1.0, which is exactly the keep-first verdict
+    * incremental dedup gives re-ingested content.
     */
   def spanDedupIngest(stream: DataFrame, spanIndexPath: String, outPath: String,
                       checkpoint: String, idCol: String = "doc_id",
@@ -518,27 +527,24 @@ object Streams {
           // re-scores identically instead of matching its own spans
           // (which would overwrite the partition with dup_frac = 1.0)
           val tag = batchTag(spark, checkpoint, batchId)
-          val idx = graft.functions.Dedup
-            .readSpanIndex(spark, vdir, excludeTag = Some(tag))
-          // spans computed ONCE per batch (persisted): the scorer and
-          // the index append both consume them — unpersisted, the
-          // tokenize → explode → window chain would run twice
-          val spans = graft.functions.Dedup
-            .spanRows(batch, idCol, textCol, k)
+          val dd = graft.functions.Dedup
+          // the probe is persisted: the scorer and the index append
+          // both consume it, so the index is scanned once per batch
+          val probe = dd.spanProbe(dd.spanRows(batch, idCol, textCol, k),
+              dd.readSpanIndex(spark, vdir, excludeTag = Some(tag)))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
           try {
-            graft.functions.Dedup
-              .spanDedupIncrementSpans(spans, idx, idCol)
+            dd.spanScores(probe, idCol)
               .withColumn("batch_id", lit(batchId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch_id")
               .parquet(outPath)
-            // O(batch) index growth; the append's anti join sees the
-            // FULL index, so a replayed append commits nothing
-            graft.functions.Dedup.appendHashIndex(spark, spanIndexPath, vdir,
-              spans, tag = Some(tag))
-          } finally { spans.unpersist(); () }
+            // O(batch) index growth, guarded by the batch's own tag
+            val fresh = dd.unmatchedSpans(probe)
+            if (!fresh.isEmpty)
+              dd.commitFreshHashes(spark, spanIndexPath, vdir, fresh, Some(tag))
+          } finally { probe.unpersist(); () }
           ()
         }
       }
@@ -627,20 +633,37 @@ object Streams {
     * on fresh out/stats paths. New streams are unaffected.
     *
     * Index discipline ([[graft.functions.Dedup.writeHashIndex]] ×2 —
-    * bootstrap both with an empty frame or a corpus build):
+    * bootstrap both with an empty frame or a corpus build, exact keys
+    * 16-byte binary md5, span keys long xxhash64):
     * the exact index grows with QUALITY-PASSING hashes (what the
     * batch funnel's dedup stage sees), the span index with KEPT
     * (post-dedup, pre-trim) docs' spans (what the batch funnel's span
     * df counts). Value-level exactly-once: a re-delivered document's
     * hash is already indexed, so it re-emits NOTHING under the new
     * batch_id — consumers union kept rows across partitions without
-    * dedup. Crash replays self-heal at ANY point: both index reads
-    * exclude this batch's own tagged deltas
-    * ([[graft.functions.Dedup.readHashIndex]]), so a replay after
-    * zero, one, or both appends recomputes the identical kept set and
-    * stats, overwrites its partitions value-identically, and lands
-    * whichever append is still missing (the appends' anti joins see
-    * the full index, so an already-landed delta commits nothing).
+    * dedup.
+    *
+    * One pass per micro-batch. Reads are one scan: each index is read
+    * ONCE, as a single typed parquet scan of base + live deltas
+    * ([[graft.functions.Dedup.readHashIndex]]), which launches no job
+    * and keeps one scan leaf whatever the delta count. Appends are
+    * derived from the scoring joins: the exact append is the kept
+    * rows' hashes (quality-passing, first in batch, absent from the
+    * index), the span append is the probe's spans with no index
+    * match — neither re-reads an index. Funnel counts come from two
+    * aggregates: scored/filtered over the persisted scored frame, and
+    * kept/trimmed/lm_kept over the persisted pre-gate frame (every
+    * kept doc with its span score and LM score), whose gated rows are
+    * then written once.
+    *
+    * Replay safety is the own-tag guard under the lock: both reads
+    * exclude this batch's own tagged deltas, so a replay after zero,
+    * one, or both appends recomputes the identical kept set, stats
+    * and append sets, and overwrites its partitions value-identically;
+    * each append commits only if no live delta of its index carries
+    * this batch's tag, a check evaluated under the index's writer
+    * lock ([[graft.functions.Dedup.commitFreshHashes]]), so whichever
+    * append is still missing lands exactly once.
     */
   def curateIngest(stream: DataFrame, exactIndexPath: String,
                    spanIndexPath: String, outPath: String, statsPath: String,
@@ -675,6 +698,8 @@ object Streams {
           // append (if the crash fell between the two) finally lands
           val tag = batchTag(spark, checkpoint, batchId)
           val ta = graft.functions.TextAnalysis
+          val dd = graft.functions.Dedup
+          val memory = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
           // 128-bit md5 text keys — the batch funnel's (and
           // Dedup.exact's) width: a PERMANENT drop decision at corpus
           // scale cannot ride a 64-bit key's birthday bound
@@ -683,71 +708,68 @@ object Streams {
               ta.nWords(col(textCol)).as("n_words"),
               ta.langIdScored(col(textCol)).as("lang_guess"),
               unhex(md5(col(textCol).cast("binary"))).as("h"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+            .persist(memory)
           try {
-            val nScored = scored.count()
-            val filtered = scored
-              .filter(col("n_words") >= minWords && col("lang_guess") =!= "unk")
-            val nFiltered = filtered.count()
+            val passes = col("n_words") >= minWords && col("lang_guess") =!= "unk"
+            val sc = scored.agg(count(lit(1)), count(when(passes, 1))).head()
+            val (nScored, nFiltered) = (sc.getLong(0), sc.getLong(1))
+            val filtered = scored.filter(passes)
             // exact dedup: first-id-wins within the batch, then drop
             // anything some earlier batch already holds (index side is
             // unbounded → merge, never a planner broadcast)
             val firsts = filtered.groupBy("h").agg(min(col(idCol)).as("_keep"))
-            val seen = graft.functions.Dedup.readHashIndex(spark, exactV,
-              excludeTag = Some(tag))
+            val seen = dd.readHashIndex(spark, exactV, excludeTag = Some(tag),
+              schema = Some(dd.Md5IndexSchema))
             val kept = filtered
               .join(firsts, Seq("h")).filter(col(idCol) === col("_keep"))
               .join(seen.hint("merge"), Seq("h"), "left_anti")
               .drop("_keep")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+              .persist(memory)
             try {
-              val nKept = kept.count()
-              // spans computed ONCE (persisted): scorer + index append
-              val spans = graft.functions.Dedup
-                .spanRows(kept, idCol, textCol, spanK)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-              val spanScores = graft.functions.Dedup.spanDedupIncrementSpans(
-                spans,
-                graft.functions.Dedup.readSpanIndex(spark, spanV,
-                  excludeTag = Some(tag)),
-                idCol)
-              val trimmed0 = kept
-                .join(spanScores.select(col(idCol), col("dup_frac")).hint("merge"),
-                  Seq(idCol))
-                .filter(col("dup_frac") <= maxDupFrac)
+              // the span probe (persisted) feeds both the trim scores
+              // and the span index append
+              val probe = dd.spanProbe(dd.spanRows(kept, idCol, textCol, spanK),
+                  dd.readSpanIndex(spark, spanV, excludeTag = Some(tag)))
+                .persist(memory)
+              // every kept doc, with its span score (a doc with no full
+              // span scores null and is not trimmed in)
+              val scoredKept = kept
+                .join(dd.spanScores(probe, idCol)
+                  .select(col(idCol), col("dup_frac")).hint("merge"), Seq(idCol), "left")
+              val trimPass = coalesce(col("dup_frac") <= maxDupFrac, lit(false))
               // optional LM gate against the PINNED frozen model (see
               // scaladoc): per-doc mean NLL over in-vocab tokens,
               // r6-rounded like the batch funnel; OOV-only docs score
               // null and fail the gate
-              val gated = lmVersionDir match {
+              val (withNll, lmPass) = lmVersionDir match {
                 case None =>
-                  trimmed0.withColumn("avg_nll", lit(null).cast("double"))
+                  (scoredKept.withColumn("avg_nll", lit(null).cast("double")), lit(true))
                 case Some(vd) =>
                   val model = graft.functions.Curation.readLmModel(spark, vd)
                   val nll = kept
-                    .select(col(idCol),
-                      explode(graft.functions.Dedup.tokens(col(textCol))).as("t"))
+                    .select(col(idCol), explode(dd.tokens(col(textCol))).as("t"))
                     .join(broadcast(model), "t")
                     .groupBy(idCol)
                     .agg(graft.functions.EngineNeutral.roundHalfUp(avg("nll"), 6)
                       .as("avg_nll"))
-                  trimmed0.join(nll.hint("merge"), Seq(idCol), "left")
-                    .filter(col("avg_nll").isNotNull &&
-                      col("avg_nll") <= maxAvgNll)
+                  (scoredKept.join(nll.hint("merge"), Seq(idCol), "left"),
+                    col("avg_nll").isNotNull && col("avg_nll") <= maxAvgNll)
               }
-              val out = gated
+              // the pre-gate frame (persisted): one aggregate counts
+              // kept, trimmed and LM-kept rows, then the gated rows are
+              // written once from it
+              val preGate = withNll
                 .select(col(idCol), col("lang_guess"), col("n_words"),
-                  col("dup_frac"), col("avg_nll"))
-                .withColumn("batch_id", lit(batchId))
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+                  col("dup_frac"), col("avg_nll"), trimPass.as("_trim"),
+                  (trimPass && lmPass).as("_pass"))
+                .persist(memory)
               try {
-                val nLmKept = out.count()
-                // one extra count only when the gate is on (kept and
-                // spans are persisted, so this re-runs the cheap
-                // join+filter, not the funnel)
-                val nTrimmed =
-                  if (lmVersionDir.isEmpty) nLmKept else trimmed0.count()
-                out.write.mode("overwrite")
+                val gc = preGate.agg(count(lit(1)), count(when(col("_trim"), 1)),
+                  count(when(col("_pass"), 1))).head()
+                val (nKept, nTrimmed, nLmKept) = (gc.getLong(0), gc.getLong(1), gc.getLong(2))
+                preGate.filter(col("_pass")).drop("_trim", "_pass")
+                  .withColumn("batch_id", lit(batchId))
+                  .write.mode("overwrite")
                   .option("partitionOverwriteMode", "dynamic")
                   .partitionBy("batch_id").parquet(outPath)
                 import spark.implicits._
@@ -757,12 +779,20 @@ object Streams {
                   .write.mode("overwrite")
                   .option("partitionOverwriteMode", "dynamic")
                   .partitionBy("batch_id").parquet(statsPath)
-                // O(batch) index growth, funnel-stage-matched (see doc)
-                graft.functions.Dedup.appendHashIndex(spark, exactIndexPath,
-                  exactV, filtered.select("h"), tag = Some(tag))
-                graft.functions.Dedup.appendHashIndex(spark, spanIndexPath,
-                  spanV, spans, tag = Some(tag))
-              } finally { out.unpersist(); spans.unpersist(); () }
+                // O(batch) index growth, funnel-stage-matched (see
+                // doc) and derived from the scoring joins: kept.h is
+                // the quality-passing hashes the exact index lacks,
+                // the unmatched probe spans are the kept docs' spans
+                // the span index lacks; each commits at most once
+                // per batch tag
+                if (nKept > 0)
+                  dd.commitFreshHashes(spark, exactIndexPath, exactV,
+                    kept.select("h"), Some(tag))
+                val freshSpans = dd.unmatchedSpans(probe)
+                if (!freshSpans.isEmpty)
+                  dd.commitFreshHashes(spark, spanIndexPath, spanV, freshSpans,
+                    Some(tag))
+              } finally { preGate.unpersist(); probe.unpersist(); () }
             } finally kept.unpersist()
           } finally scored.unpersist()
           ()

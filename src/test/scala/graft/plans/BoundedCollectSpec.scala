@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 
 /** Pins BoundedCollectLong's contract: element-equal to collect_list
-  * (as multisets) for every group strictly under the cap, hard-capped
-  * buffer for groups over it, exact count unaffected.
+  * (as multisets) for every group within the cap, null (never a
+  * truncated array) for groups over it, exact count unaffected.
   */
 class BoundedCollectSpec extends AnyFunSpec {
   lazy val spark = SparkTestSession.spark
@@ -29,13 +29,22 @@ class BoundedCollectSpec extends AnyFunSpec {
     val w = want.collect().map(r => r.getString(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
     // exact counts always
     assert(g.view.mapValues(_._1).toMap === w.view.mapValues(_._1).toMap)
-    // under the cap: identical multisets
-    for (k <- Seq("a", "b")) assert(g(k)._2 === w(k)._2, s"group $k")
-    // at/over the cap: exactly `limit` elements, all from the group
-    for (k <- Seq("c", "d")) {
-      assert(g(k)._2.size === limit, s"group $k size")
-      assert(g(k)._2.toSet.subsetOf(w(k)._2.toSet), s"group $k membership")
-    }
+    // within the cap (including exactly `limit`): identical multisets
+    for (k <- Seq("a", "b", "c")) assert(g(k)._2 === w(k)._2, s"group $k")
+    // over the cap: null, never a truncated array
+    assert(g("d")._2 === null, "group d")
+  }
+
+  it("a group over the cap is null even without a paired count filter") {
+    val rows = ((1 to 9).map(i => ("big", i.toLong)) ++
+      (1 to 3).map(i => ("small", i.toLong))).toDF("k", "v")
+      .repartition(4) // partials overflow only after the merge
+    val got = rows.groupBy("k")
+      .agg(BoundedCollect.boundedCollectLong(col("v"), 5).as("ms"))
+      .collect().map(r => r.getString(0) -> Option(r.getSeq[Long](1))).toMap
+    assert(got("big").isEmpty,
+      s"truncated array observed for an overflowed group: ${got("big")}")
+    assert(got("small").map(_.sorted) == Some(Seq(1L, 2L, 3L)))
   }
 
   it("null inputs are skipped like collect_list") {
