@@ -4,14 +4,16 @@ import graft.pipeline._
 
 /** Throughput of the typed pipeline API (the pippin-parity surface)
   * over N in-memory elements: filter → map → sum, and the same chain
-  * through the column API for comparison.
+  * through the column API for comparison. Both start from the same
+  * `Pipeline.fromSeq` source, so the pair compares chains, not
+  * sources. The session uses every host core.
   *
   *   sbt "runMain graft.examples.PipelineBench [n]"
   */
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(600000)
-    val spark = graft.Sessions.builder(32, "graft-pipeline-bench").getOrCreate()
+    val spark = graft.Sessions.builder(appName = "graft-pipeline-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -45,7 +47,7 @@ object PipelineBench {
       }
       time(s"column API   filter->map->sum (run $i)") {
         import org.apache.spark.sql.functions._
-        spark.createDataset(data).toDF("v")
+        Pipeline.fromSeq(spark, data).toDF("v")
           .filter(col("v") % 2 === 0)
           .select((col("v") * 2L).as("v2"))
           .agg(sum("v2")).head()

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit, TimeoutException}
@@ -233,18 +234,27 @@ final class Pipeline[T] private[pipeline] (val ctx: PipelineCtx, val initStage: 
 
 object Pipeline {
 
-  /** Reference pipeline.FromSlice (pipeline/pipeline.go:101). */
+  /** Reference pipeline.FromSlice (pipeline/pipeline.go:101). The
+    * elements are encoded eagerly on the driver, as `createDataset`
+    * encodes them (an element the encoder rejects throws here, and
+    * elements need not be Java-serializable), but they stay OUT of
+    * the logical plan: the source is an RDD leaf over the encoded
+    * rows, not a `LocalRelation` holding them, because every analyzer
+    * and optimizer rule re-walks a `LocalRelation`'s rows (a loop of
+    * 200k-element pipelines spent over half its CPU samples there).
+    */
   def fromSeq[T: Encoder](spark: SparkSession, seq: Seq[T],
                           config: PipelineConfig = PipelineConfig()): Pipeline[T] =
-    fromDataset(spark.createDataset(seq), config)
+    fromDataset(Bridge.localDataset(spark, seq, implicitly[Encoder[T]]), config)
 
   /** Reference pipeline.FromMap (pipeline/pipeline.go:114): the map
-    * becomes a distributed dataset of (key, value) tuples.
+    * becomes a distributed dataset of (key, value) tuples, built as
+    * [[fromSeq]] builds its source (driver-encoded, out of the plan).
     */
   def fromMap[K, V](spark: SparkSession, m: Map[K, V],
                     config: PipelineConfig = PipelineConfig())(
       implicit enc: Encoder[(K, V)]): Pipeline[(K, V)] =
-    fromDataset(spark.createDataset(m.toSeq), config)
+    fromSeq(spark, m.toSeq, config)
 
   /** Spark-native source the reference cannot have: any Dataset
     * (parquet scan, SQL result, streaming source, ...).

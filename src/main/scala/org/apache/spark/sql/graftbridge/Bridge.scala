@@ -1,7 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ↔ Expression bridging for custom Catalyst expressions.
   *
@@ -70,5 +75,28 @@ object Bridge {
     classic.Dataset.ofRows(ds.sparkSession,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds,
         isStreaming = false))
+  }
+
+  /** A local Seq as a Dataset whose leaf is an RDD of the encoded
+    * rows, not a `LocalRelation` holding them (`createDataset(seq)`
+    * puts every row inside the logical plan, where each analyzer and
+    * optimizer rule that maps a node's expressions maps and compares
+    * all of them again). The rows are encoded as `createDataset`
+    * encodes them — eagerly on the driver, with the same serializer,
+    * so encoding errors surface at this call and elements need not be
+    * Java-serializable — and sliced as `LocalTableScanExec` slices
+    * them (min(n, leaf-node parallelism) partitions). The leaf reports
+    * the size estimate the `LocalRelation` would have, so broadcast
+    * planning is unchanged.
+    */
+  def localDataset[T](spark: SparkSession, data: Seq[T], enc: Encoder[T]): Dataset[T] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val toRow = encoderFor(enc).createSerializer()
+    val output = DataTypeUtils.toAttributes(enc.schema)
+    val rows = data.iterator.map(d => toRow(d).copy()).toVector
+    val rdd = session.sparkContext.parallelize(rows,
+      math.min(math.max(rows.length, 1), session.leafNodeDefaultParallelism))
+    val stats = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * rows.length)
+    classic.Dataset[T](session, LogicalRDD(output, rdd)(session, Some(stats)))(enc)
   }
 }

@@ -56,6 +56,9 @@ class PipelineSpec extends AnyFunSuite {
     val p = Pipeline.fromMap(spark, Map("one" -> 1, "two" -> 2))
     assert(Aggregate.asMap(p.initStage, (t: (String, Int)) => t).get ==
       Map("one" -> 1, "two" -> 2))
+    val m = (1 to 500).map(i => s"k$i" -> i.toLong).toMap
+    assert(Aggregate.asMap(Pipeline.fromMap(spark, m).initStage,
+      (t: (String, Long)) => t).get == m)
   }
 
   test("numeric aggregations: sum/avg/min/max/count") {
@@ -157,7 +160,83 @@ class PipelineSpec extends AnyFunSuite {
     assert(ParGauge.maxSeen <= 2,
       s"observed ${ParGauge.maxSeen} concurrent tasks under a total bound of 2")
   }
+
+  test("fromSeq keeps its elements out of the plan: one RDD leaf, LocalTableScan's slicing") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val n = 200000
+    val ds = Pipeline.fromSeq(spark, 1 to n).initStage.ds
+    val leaves = ds.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.collect { case l: LocalRelation => l }.isEmpty, s"leaves: $leaves")
+    assert(leaves.collect { case l: LogicalRDD => l }.size == 1, s"leaves: $leaves")
+    assert(leaves.size == 1, s"leaves: $leaves")
+    assert(ds.queryExecution.toRdd.getNumPartitions ==
+      math.min(n, spark.sparkContext.defaultParallelism))
+  }
+
+  test("fromSeq encodes on the driver: kryo elements need not be Java-serializable") {
+    implicit val opaque: org.apache.spark.sql.Encoder[OpaqueBox] =
+      org.apache.spark.sql.Encoders.kryo[OpaqueBox]
+    val s = Pipeline.fromSeq(spark, (1 to 50).map(new OpaqueBox(_))).initStage
+    assert(Aggregate.sum(s.map(_.v)) == Success(1275))
+  }
+
+  test("asSlice returns fromSeq's input order for structured, optional, null and nested elements") {
+    val recs = (1 to 30).map(i => SeqRec(i, if (i % 4 == 0) null else s"r$i", Seq.fill(i % 3)(i)))
+    assert(Aggregate.asSlice(Pipeline.fromSeq(spark, recs).initStage).get == recs)
+    val opts = (1 to 30).map(i => if (i % 5 == 0) None else Some(i.toLong))
+    assert(Aggregate.asSlice(Pipeline.fromSeq(spark, opts).initStage).get == opts)
+    val strs = Seq("b", null, "a", null, "c")
+    assert(Aggregate.asSlice(Pipeline.fromSeq(spark, strs).initStage).get == strs)
+    val nested = Seq(Seq(3, 1), Seq.empty[Int], Seq(2), Seq(5, 4, 6))
+    assert(Aggregate.asSlice(Pipeline.fromSeq(spark, nested).initStage).get == nested)
+  }
+
+  test("an element the encoder rejects throws from fromSeq itself, before any action") {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      // 31 integer digits: beyond the encoder's DecimalType(38,18)
+      val e = intercept[RuntimeException] {
+        Pipeline.fromSeq(spark, Seq(BigDecimal(1), BigDecimal("1e30")))
+      }
+      assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition ==
+        "EXPRESSION_ENCODING_FAILED", e.getMessage)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.getMessage)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a small fromSeq source keeps its size estimate: joined to nation it is the broadcast side") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val keys = Pipeline.fromSeq(spark, (0 until 100).map(i => (i % 25, i.toLong))).initStage
+      .toDF.toDF("n_nationkey", "v")
+    val nation = graft.Tables.nation(spark, "/root/testdata/sf0.001")
+    // a left outer join can only build its right (the in-memory) side;
+    // with no size estimate the leaf reports spark.sql.defaultSizeInBytes
+    // and the planner falls back to a sort-merge join
+    val plan = nation.join(keys, Seq("n_nationkey"), "left_outer").queryExecution.sparkPlan
+    val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(bhj.size == 1, plan.toString)
+    val build = bhj.head.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildLeft => bhj.head.left
+      case org.apache.spark.sql.catalyst.optimizer.BuildRight => bhj.head.right
+    }
+    assert(build.collect { case f: FileSourceScanExec => f }.isEmpty, plan.toString)
+  }
 }
+
+/** Not Serializable: shippable only as the bytes its kryo encoder
+  * wrote on the driver.
+  */
+final class OpaqueBox(val v: Int)
+
+final case class SeqRec(id: Int, name: String, tags: Seq[Int])
 
 /** JVM-wide concurrency gauge: executor lambdas run in this JVM under
   * local[4], so a shared static observes true task concurrency.
