@@ -59,8 +59,8 @@ object ClusterIndex {
     * (isolated docs label themselves).
     */
   def writeIndex(spark: SparkSession, graphPath: String, path: String): String = {
-    val gv = graft.operators.Versioned.resolve(spark, graphPath)
-      .getOrElse(sys.error(s"no committed graph index at $graphPath"))
+    val gv = graft.operators.Versioned.committed(spark, graphPath,
+      "graph index (GraphIndex.writeIndex)")
     val vertices = GraphIndex.readPostings(spark, gv).select("id").distinct()
     val edges = GraphIndex.readEdges(spark, gv).select("id_a", "id_b")
     val comps = graft.operators.ConnectedComponents.labelPropagation(vertices, edges)
@@ -98,10 +98,10 @@ object ClusterIndex {
     */
   def updateFromDelta(spark: SparkSession, graphPath: String, path: String,
                       graphDeltaDir: String): String = {
-    val gv = graft.operators.Versioned.resolve(spark, graphPath)
-      .getOrElse(sys.error(s"no committed graph index at $graphPath"))
-    val cv = graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed cluster index at $path"))
+    val gv = graft.operators.Versioned.committed(spark, graphPath,
+      "graph index (GraphIndex.writeIndex)")
+    val cv = graft.operators.Versioned.committed(spark, path,
+      "cluster index (ClusterIndex.writeIndex)")
     // A = re-judged old docs + the batch's new docs
     val a = readOrEmpty(spark, s"$graphDeltaDir/affected",
         StructType(Seq(StructField("id", LongType))))
@@ -146,8 +146,8 @@ object ClusterIndex {
     */
   def compactIndex(spark: SparkSession, path: String): String =
     graft.operators.Versioned.commitNew(spark, path) { dir =>
-      val vdir = graft.operators.Versioned.resolve(spark, path)
-        .getOrElse(sys.error(s"no committed cluster index at $path"))
+      val vdir = graft.operators.Versioned.committed(spark, path,
+        "cluster index (ClusterIndex.writeIndex)")
       readLabels(spark, vdir).write.parquet(s"$dir/labels")
     }
 }

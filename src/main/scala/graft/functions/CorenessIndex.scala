@@ -82,8 +82,8 @@ object CorenessIndex {
     * docs at coreness 0).
     */
   def writeIndex(spark: SparkSession, graphPath: String, path: String): String = {
-    val gv = graft.operators.Versioned.resolve(spark, graphPath)
-      .getOrElse(sys.error(s"no committed graph index at $graphPath"))
+    val gv = graft.operators.Versioned.committed(spark, graphPath,
+      "graph index (GraphIndex.writeIndex)")
     val vertices = GraphIndex.readPostings(spark, gv).select("id").distinct()
     val edges = GraphIndex.readEdges(spark, gv).select("id_a", "id_b")
     decompose(vertices, edges) { out =>
@@ -118,10 +118,10 @@ object CorenessIndex {
     */
   def updateFromDelta(spark: SparkSession, graphPath: String, path: String,
                       graphDeltaDir: String): String = {
-    val gv = graft.operators.Versioned.resolve(spark, graphPath)
-      .getOrElse(sys.error(s"no committed graph index at $graphPath"))
-    val cv = graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed coreness index at $path"))
+    val gv = graft.operators.Versioned.committed(spark, graphPath,
+      "graph index (GraphIndex.writeIndex)")
+    val cv = graft.operators.Versioned.committed(spark, path,
+      "coreness index (CorenessIndex.writeIndex)")
     // A = re-judged old docs + the batch's new docs
     val a = readOrEmpty(spark, s"$graphDeltaDir/affected",
         StructType(Seq(StructField("id", LongType))))
@@ -160,8 +160,8 @@ object CorenessIndex {
     */
   def compactIndex(spark: SparkSession, path: String): String =
     graft.operators.Versioned.commitNew(spark, path) { dir =>
-      val vdir = graft.operators.Versioned.resolve(spark, path)
-        .getOrElse(sys.error(s"no committed coreness index at $path"))
+      val vdir = graft.operators.Versioned.committed(spark, path,
+        "coreness index (CorenessIndex.writeIndex)")
       readCoreness(spark, vdir).write.parquet(s"$dir/labels")
     }
 }

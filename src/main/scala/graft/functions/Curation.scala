@@ -292,10 +292,8 @@ object Curation {
   def appendDecontamIndex(newBench: DataFrame, idCol: String, textCol: String,
                           k: Int, indexPath: String): Option[String] = {
     val spark = newBench.sparkSession
-    val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed benchmark gram index at $indexPath — " +
-          "build one with writeDecontamIndex first"))
+    val vdir = graft.operators.Versioned.committed(spark, indexPath,
+      "benchmark gram index (Curation.writeDecontamIndex)")
     val existing = readDecontamIndex(spark, vdir).select(col("h")).distinct()
     val fresh = Dedup.spanRows(newBench, idCol, textCol, k)
       .select(col("h")).distinct()
@@ -436,8 +434,8 @@ object Curation {
 
   /** Manifest of the latest committed [[exportShards]] export. */
   def readShardManifest(spark: SparkSession, path: String): DataFrame = {
-    val dir = graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed shard export under $path"))
+    val dir = graft.operators.Versioned.committed(spark, path,
+      "shard export (Curation.exportShards)")
     spark.read.parquet(s"$dir/manifest")
   }
 
@@ -446,8 +444,8 @@ object Curation {
     * that a single-directory read).
     */
   def readShards(spark: SparkSession, path: String): DataFrame = {
-    val dir = graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed shard export under $path"))
+    val dir = graft.operators.Versioned.committed(spark, path,
+      "shard export (Curation.exportShards)")
     // partition-directory inference narrows shard to int; restore the
     // written long so round-trips are schema-identical to the writer
     spark.read.parquet(s"$dir/shards")

@@ -317,8 +317,8 @@ object Dedup {
     */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String): String =
-    IndexDeltas.compactTabular(spark, indexPath, Seq("grams"), "hash",
-      distinct = true)
+    IndexDeltas.compactTabular(spark, indexPath, Seq("grams"),
+      "hash index (Dedup.writeHashIndex)", distinct = true)
 
   /** Build (or atomically refresh) the persisted span-hash index the
     * incremental/streaming span-dedup face probes: the distinct

@@ -183,8 +183,8 @@ object GraphIndex {
   def appendIndex(batch: DataFrame, idCol: String, textCol: String,
                   path: String, tag: Option[String] = None): Option[String] = {
     val spark = batch.sparkSession
-    val vdir = graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed graph index at $path"))
+    val vdir = graft.operators.Versioned.committed(spark, path,
+      "graph index (GraphIndex.writeIndex)")
     val p = readParams(spark, vdir)
     val postings = readPostings(spark, vdir)
     val batchIds = batch.select(col(idCol).as("id")).distinct()
@@ -282,8 +282,8 @@ object GraphIndex {
       // _LOCK (the compactLexicalIndex discipline): a rebuild landing
       // between an outside resolve and the lock would be silently
       // erased by folding the superseded version over it
-      val vdir = graft.operators.Versioned.resolve(spark, path)
-        .getOrElse(sys.error(s"no committed graph index at $path"))
+      val vdir = graft.operators.Versioned.committed(spark, path,
+        "graph index (GraphIndex.writeIndex)")
       val p = readParams(spark, vdir)
       import spark.implicits._
       Seq((p.shingleK, p.minShared, p.minDf, p.maxDf))

@@ -54,7 +54,8 @@ object HealthProfile {
   def appendBatch(batch: DataFrame, srcCol: String, lenCol: String,
                   path: String, tag: Option[String] = None): Option[String] =
     graft.operators.TaggedProfile.appendTagged(
-      batch.sparkSession, path, "health profile", tag) { dir =>
+      batch.sparkSession, path, "health profile (HealthProfile.writeIndex)",
+      tag) { dir =>
       histOf(batch, srcCol, lenCol).write.parquet(s"$dir/hist")
     }
 
@@ -116,7 +117,7 @@ object HealthProfile {
     */
   def compactIndex(spark: SparkSession, path: String): String =
     graft.operators.TaggedProfile.compactWithTags(
-      spark, path, "health profile") { (vdir, dir) =>
+      spark, path, "health profile (HealthProfile.writeIndex)") { (vdir, dir) =>
       readHist(spark, vdir).write.parquet(s"$dir/hist")
     }
 }

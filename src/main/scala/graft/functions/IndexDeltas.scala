@@ -19,15 +19,15 @@ private[functions] object IndexDeltas {
     * HIGHEST-batch tagged delta is the only one that can still
     * replay — it carries over verbatim (tables + tag files); every
     * other delta folds. Untagged (batch-append) deltas always fold.
-    * `distinct` de-duplicates each folded table (hash SETS).
+    * `distinct` de-duplicates each folded table (hash SETS); `what`
+    * names the index and its writer for [[graft.operators.Versioned.committed]].
     * Runs under commitNew's lock; returns the new version dir.
     */
   def compactTabular(spark: SparkSession, indexPath: String,
                      subs: Seq[String], what: String,
                      distinct: Boolean = false): String =
     graft.operators.Versioned.commitNew(spark, indexPath) { nv =>
-      val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-        .getOrElse(sys.error(s"no committed $what index at $indexPath"))
+      val vdir = graft.operators.Versioned.committed(spark, indexPath, what)
       val conf = spark.sessionState.newHadoopConf()
       def tagsOf(d: String): Seq[String] = {
         val p = new org.apache.hadoop.fs.Path(d)

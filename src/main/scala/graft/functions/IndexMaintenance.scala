@@ -102,7 +102,8 @@ object IndexMaintenance {
     // own stored bucket count, never the session default
     Family("lexical", (s, v) => has(s, v, "tf") && has(s, v, "stats"),
       (s, r) => {
-        val vdir = graft.operators.Versioned.resolve(s, r).get
+        val vdir = graft.operators.Versioned.committed(s, r,
+          "lexical index (Retrieval.writeLexicalIndex)")
         Retrieval.compactLexicalIndex(s, r,
           Retrieval.idBucketsOf(s, vdir).getOrElse(Retrieval.IdBuckets))
         ()

@@ -322,8 +322,8 @@ object Ivf {
   /** The committed version dir of a persisted index at `path`. */
   private[functions] def indexDir(spark: org.apache.spark.sql.SparkSession,
                                   path: String): String =
-    graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed index at $path"))
+    graft.operators.Versioned.committed(spark, path,
+      "index (Ivf.writeIndex or Pq.writeIndex)")
 
   /** Reload a persisted index's centroids (tiny: k × dim doubles). */
   def readCentroids(spark: org.apache.spark.sql.SparkSession,

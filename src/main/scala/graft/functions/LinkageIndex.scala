@@ -135,9 +135,8 @@ object LinkageIndex {
                   blockCols: Seq[String], indexPath: String,
                   tag: Option[String] = None): Option[String] = {
     val spark = newDocs.sparkSession
-    val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed linkage index at $indexPath — build one with writeIndex first"))
+    val vdir = graft.operators.Versioned.committed(spark, indexPath,
+      "linkage index (LinkageIndex.writeIndex)")
     val meta = readMeta(spark, vdir)
     require(meta.nBlock == blockCols.size,
       s"index at $indexPath was built with ${meta.nBlock} block columns, " +
@@ -222,9 +221,8 @@ object LinkageIndex {
     graft.operators.Versioned.commitNew(spark, indexPath) { dir =>
       // resolved under the writer _LOCK (see compactLexicalIndex): an
       // append racing this fold cannot be silently dropped
-      val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed linkage index at $indexPath"))
+      val vdir = graft.operators.Versioned.committed(spark, indexPath,
+        "linkage index (LinkageIndex.writeIndex)")
       val meta = readMeta(spark, vdir)
       component(spark, vdir, "docs").write.parquet(s"$dir/docs")
       component(spark, vdir, "keys").write.parquet(s"$dir/keys")

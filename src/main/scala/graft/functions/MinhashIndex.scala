@@ -117,7 +117,7 @@ object MinhashIndex {
     */
   def compactIndex(spark: SparkSession, indexPath: String): String =
     IndexDeltas.compactTabular(spark, indexPath, Seq("sigs", "bands"),
-      "minhash")
+      "minhash index (MinhashIndex.writeIndex)")
 
   /** Batch-vs-corpus near-dup candidates through the persisted index:
     * (id_a = indexed doc, id_b = batch doc, est_jaccard), est ≥

@@ -515,10 +515,8 @@ object Retrieval {
   def appendLexicalIndex(newDocs: DataFrame, idCol: String, textCol: String,
                          indexPath: String): Option[String] = {
     val spark = newDocs.sparkSession
-    val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed lexical index at $indexPath — " +
-          "build one with writeLexicalIndex first"))
+    val vdir = graft.operators.Versioned.committed(spark, indexPath,
+      "lexical index (Retrieval.writeLexicalIndex)")
     val deltas = graft.operators.Versioned.listDeltas(spark, vdir)
     // dedup against ids/ — NOT the tf id set: a zero-token doc has no
     // tf rows but does count in stats n, so tf-based dedup would
@@ -572,9 +570,8 @@ object Retrieval {
       // and a delta committed while the fold was being planned cannot
       // be silently dropped (commitDelta closes this window in the
       // append direction; this closes the fold direction)
-      val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed lexical index at $indexPath"))
+      val vdir = graft.operators.Versioned.committed(spark, indexPath,
+        "lexical index (Retrieval.writeLexicalIndex)")
       val deltas = graft.operators.Versioned.listDeltas(spark, vdir)
       val (tf, df, _) = readLexicalIndex(spark, vdir)
       // preserve (or adopt) the two-level layout across compaction so

@@ -184,10 +184,8 @@ object Selection {
   def appendImportanceModel(newDocs: DataFrame, idCol: String, textCol: String,
                             isTarget: Column, modelPath: String): Option[String] = {
     val spark = newDocs.sparkSession
-    val vdir = graft.operators.Versioned.resolve(spark, modelPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed importance model at $modelPath — " +
-          "build one with writeImportanceModel first"))
+    val vdir = graft.operators.Versioned.committed(spark, modelPath,
+      "importance model (Selection.writeImportanceModel)")
     val hits = graft.operators.Versioned.readTable(spark, vdir, "ids")
       .join(broadcast(newDocs.select(col(idCol).as("id"))), Seq("id"), "left_semi")
       .distinct()
@@ -236,9 +234,8 @@ object Selection {
     */
   def compactImportanceModel(spark: SparkSession, modelPath: String): String =
     graft.operators.Versioned.commitNew(spark, modelPath) { dir =>
-      val vdir = graft.operators.Versioned.resolve(spark, modelPath)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed importance model at $modelPath"))
+      val vdir = graft.operators.Versioned.committed(spark, modelPath,
+        "importance model (Selection.writeImportanceModel)")
       graft.operators.Versioned.readTable(spark, vdir, "ids")
         .write.parquet(s"$dir/ids")
       // fold once to disk; the lr/defaults caches then derive from the

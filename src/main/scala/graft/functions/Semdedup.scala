@@ -147,8 +147,8 @@ object Semdedup {
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
-    val dir = graft.operators.Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed semdedup index at $path"))
+    val dir = graft.operators.Versioned.committed(spark, path,
+      "semdedup index (Semdedup.writeIndex)")
     val centroids = readCentroidsFrom(spark, dir)
     val add = assignClusters(batch, centroids, idCol, vecCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -185,8 +185,8 @@ object Semdedup {
     */
   def compactIndex(spark: SparkSession, path: String): Unit =
     graft.operators.Versioned.commitNew(spark, path) { v =>
-      val dir = graft.operators.Versioned.resolve(spark, path)
-        .getOrElse(sys.error(s"no committed semdedup index at $path"))
+      val dir = graft.operators.Versioned.committed(spark, path,
+        "semdedup index (Semdedup.writeIndex)")
       spark.read.parquet(s"$dir/centroids")
         .repartition(1).write.mode("overwrite").parquet(s"$v/centroids")
       readMembersFrom(spark, dir)
@@ -216,8 +216,8 @@ object Semdedup {
                    vecCol: String = "embedding"): String =
     graft.operators.Versioned.commitNew(spark, path) { v =>
       import spark.implicits._
-      val dir = graft.operators.Versioned.resolve(spark, path)
-        .getOrElse(sys.error(s"no committed semdedup index at $path"))
+      val dir = graft.operators.Versioned.committed(spark, path,
+        "semdedup index (Semdedup.writeIndex)")
       val members = readMembersFrom(spark, dir)
         .select(col(idCol), col("u").as(vecCol))
         .persist(StorageLevel.MEMORY_AND_DISK)

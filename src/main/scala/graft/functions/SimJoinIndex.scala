@@ -169,9 +169,8 @@ object SimJoinIndex {
                   indexPath: String,
                   tag: Option[String] = None): Option[String] = {
     val spark = newDocs.sparkSession
-    val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed simjoin index at $indexPath — build one with writeIndex first"))
+    val vdir = graft.operators.Versioned.committed(spark, indexPath,
+      "simjoin index (SimJoinIndex.writeIndex)")
     val meta = readMeta(spark, vdir)
     val batch = newDocs.select(col(idCol).as("id"), col(textCol).as("text"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
@@ -225,9 +224,8 @@ object SimJoinIndex {
     */
   def compactIndex(spark: SparkSession, indexPath: String): String =
     graft.operators.Versioned.commitNew(spark, indexPath) { dir =>
-      val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed simjoin index at $indexPath"))
+      val vdir = graft.operators.Versioned.committed(spark, indexPath,
+        "simjoin index (SimJoinIndex.writeIndex)")
       val meta = readMeta(spark, vdir)
       component(spark, vdir, "ids").write.parquet(s"$dir/ids")
       component(spark, vdir, "shingles").write.parquet(s"$dir/shingles")

@@ -125,7 +125,7 @@ object SimhashIndex {
     */
   def compactIndex(spark: SparkSession, indexPath: String): String =
     IndexDeltas.compactTabular(spark, indexPath, Seq("sims", "sbands"),
-      "simhash")
+      "simhash index (SimhashIndex.writeIndex)")
 
   /** Batch-vs-corpus near-dup candidates through the persisted index:
     * (id_a = indexed doc, id_b = batch doc, hamming ≤ [[MaxHamming]]).

@@ -73,7 +73,8 @@ object SketchProfile {
     // writer _LOCK via commitDeltaIf (a double sketch merge
     // double-counts)
     graft.operators.TaggedProfile.appendTagged(
-      batch.sparkSession, path, "sketch profile", tag) { dir =>
+      batch.sparkSession, path, "sketch profile (SketchProfile.writeIndex)",
+      tag) { dir =>
       profileOf(batch, idCol, textCol, srcCol).write.parquet(s"$dir/profile")
     }
 
@@ -118,7 +119,7 @@ object SketchProfile {
     */
   def compactIndex(spark: SparkSession, path: String): String =
     graft.operators.TaggedProfile.compactWithTags(
-      spark, path, "sketch profile") { (vdir, dir) =>
+      spark, path, "sketch profile (SketchProfile.writeIndex)") { (vdir, dir) =>
       readProfile(spark, vdir).write.parquet(s"$dir/profile")
     }
 }

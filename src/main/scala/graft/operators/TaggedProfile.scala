@@ -33,8 +33,7 @@ object TaggedProfile {
     */
   def appendTagged(spark: SparkSession, path: String, what: String,
                    tag: Option[String])(write: String => Unit): Option[String] = {
-    val vdir = Versioned.resolve(spark, path)
-      .getOrElse(sys.error(s"no committed $what at $path"))
+    val vdir = Versioned.committed(spark, path, what)
     if (tag.exists(t => committedTags(spark, vdir).contains(t))) None
     else Versioned.commitDeltaIf(spark, path, vdir)(
       tag.forall(t => !committedTags(spark, vdir).contains(t))) { dir =>
@@ -75,8 +74,7 @@ object TaggedProfile {
   def compactWithTags(spark: SparkSession, path: String, what: String)
                      (fold: (String, String) => Unit): String =
     Versioned.commitNew(spark, path) { dir =>
-      val vdir = Versioned.resolve(spark, path)
-        .getOrElse(sys.error(s"no committed $what at $path"))
+      val vdir = Versioned.committed(spark, path, what)
       fold(vdir, dir)
       import spark.implicits._
       committedTags(spark, vdir).toSeq.sorted.toDF("tag")

@@ -80,6 +80,16 @@ object Versioned {
       .map(v => new Path(root, s"_v=$v").toString)
   }
 
+  /** [[resolve]], or the one failure every reader, appender and
+    * compactor of a versioned artifact raises when nothing is
+    * committed at `path`: an `IllegalStateException` naming the path
+    * and `what` — the artifact and the writer that builds it, e.g.
+    * `"semdedup index (Semdedup.writeIndex)"`.
+    */
+  def committed(spark: SparkSession, path: String, what: String): String =
+    resolve(spark, path).getOrElse(
+      throw new IllegalStateException(s"no committed $what at $path"))
+
   /** EXACT same-process mutual exclusion, keyed by canonical root: the
     * `_LOCK` file below is NOT atomic on every FileSystem —
     * RawLocalFileSystem's create(path, overwrite=false) is a

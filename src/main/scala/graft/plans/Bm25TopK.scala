@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
@@ -65,14 +65,6 @@ object Bm25TopK {
     override def producedAttributes: AttributeSet = AttributeSet(outputAttrs)
     override protected def withNewChildInternal(c: LogicalPlan): ScoreTopKNode =
       copy(child = c)
-  }
-
-  object Strategy extends SparkStrategy {
-    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case ScoreTopKNode(qs, k, child, out) =>
-        ScoreTopKExec(qs, k, out, planLater(child)) :: Nil
-      case _ => Nil
-    }
   }
 
   final case class ScoreTopKExec(qs: ScoreKernels.Bm25QuerySet, k: Int,
@@ -241,14 +233,12 @@ object Bm25TopK {
   /** Per-partition BM25 top-k over (id LONG, idx INT, c DOUBLE) rows:
     * emits ≤ queries×k (query_id, doc_id, score) rows per partition —
     * feed the result through [[TopKPerKey.topK]] for the global merge.
-    * Self-registering strategy, the TopKPerKey pattern.
+    * Planned by [[GraftStrategy]] on any session.
     */
   def scoreTopK(df: DataFrame, qs: ScoreKernels.Bm25QuerySet, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
+    GraftStrategy.ensure(spark)
     val analyzed = Bridge.analyzed(df)
     require(analyzed.output.length == 3 &&
       analyzed.output(0).dataType == LongType &&

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers graft's custom Catalyst expressions as SQL functions, so
   * `spark.sql("SELECT rolling_hash(text) ...")` works alongside the
-  * Column API.
+  * Column API, and (at session build) graft's plan lint.
   *
   * Two entry points:
   *  - `.withExtensions(new GraftExtensions)` at session build time

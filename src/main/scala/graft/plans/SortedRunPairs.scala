@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -60,14 +60,6 @@ object SortedRunPairs {
     override def producedAttributes: AttributeSet = AttributeSet(outputAttrs)
     override protected def withNewChildInternal(c: LogicalPlan): RunPairsNode =
       copy(child = c)
-  }
-
-  object Strategy extends SparkStrategy {
-    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case RunPairsNode(maxBucket, child, out) =>
-        RunPairsExec(maxBucket, out, planLater(child)) :: Nil
-      case _ => Nil
-    }
   }
 
   final case class RunPairsExec(maxBucket: Int, outputAttrs: Seq[Attribute],
@@ -196,15 +188,13 @@ object SortedRunPairs {
     * bkey LONG) rows: buckets of fewer than 2 ids emit nothing,
     * buckets above `maxBucket` are dropped whole (SQL-metric-counted).
     * Feed the result through dropDuplicates(id_a, id_b) exactly like
-    * pairsFromBucketsIds' explode. Self-registering strategy, the
-    * TopKPerKey pattern.
+    * pairsFromBucketsIds' explode. Planned by [[GraftStrategy]] on any
+    * session.
     */
   def pairs(df: DataFrame, maxBucket: Int): DataFrame = {
     require(maxBucket >= 2, "maxBucket must be >= 2")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
+    GraftStrategy.ensure(spark)
     val analyzed = Bridge.analyzed(df)
     require(analyzed.output.length == 3 &&
       analyzed.output(0).dataType == LongType &&

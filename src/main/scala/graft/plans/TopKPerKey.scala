@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descendi
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Native top-k-per-key as a full custom operator stack: logical node
@@ -36,18 +36,6 @@ object TopKPerKey {
     override def output: Seq[Attribute] = child.output
     override protected def withNewChildInternal(c: LogicalPlan): TopKPerKeyNode =
       copy(child = c)
-  }
-
-  /** Plans the logical node as final-over-partial; Spark inserts the
-    * key exchange to satisfy the final's required distribution.
-    */
-  object Strategy extends SparkStrategy {
-    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case TopKPerKeyNode(keys, order, k, child) =>
-        TopKExec(keys, order, k, partial = false,
-          TopKExec(keys, order, k, partial = true, planLater(child))) :: Nil
-      case _ => Nil
-    }
   }
 
   /** Bounded-heap top-k. `partial = true` runs before the shuffle on
@@ -135,17 +123,14 @@ object TopKPerKey {
   }
 
   /** Keep each key's first `k` rows under `order` — `order` entries
-    * are (columnName, descending?). Self-registering: attaches the
-    * planner strategy to the DataFrame's session (idempotent), so it
-    * works on any session without extension wiring.
+    * are (columnName, descending?). Works on any session: it makes
+    * the DataFrame's session plan the node ([[GraftStrategy.ensure]]).
     */
   def topK(df: DataFrame, keyCols: Seq[String],
            order: Seq[(String, Boolean)], k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
+    GraftStrategy.ensure(spark)
     val analyzed = Bridge.analyzed(df)
     def attr(name: String): Attribute =
       analyzed.output.find(_.name == name).getOrElse(

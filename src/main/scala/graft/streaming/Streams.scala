@@ -4,6 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.storage.StorageLevel
+
+import graft.functions.{ClusterIndex, CorenessIndex, Curation, Dedup, GraphIndex,
+  HealthProfile, Ivf, LinkageIndex, MinhashIndex, Retrieval, Selection, Semdedup,
+  SimJoinIndex, SimhashIndex, SketchProfile, TextAnalysis}
+import graft.operators.Versioned
 
 /** Structured-Streaming re-expression of the reference's unbounded
   * `pipeline.FromChannel` source (/root/reference/pipeline/
@@ -284,16 +290,6 @@ object Streams {
         col(rightTs) >= col(leftTs) - expr(s"INTERVAL $lookbackSeconds SECONDS") &&
         col(rightTs) < col(leftTs))
 
-  /** Streaming incremental corpus ingest: every micro-batch keeps only
-    * first occurrences (min `idCol` per `key`) that are NOT already in
-    * the parquet-backed key index, appends the survivors to `outPath`
-    * and their keys to `indexPath` — [[graft.functions.Dedup.incremental]]
-    * as a continuously-running pipeline. The index is the only state
-    * and it lives in files, not the state store: at 100 TB the
-    * anti-join is a hash join against a bucketed key table, and a
-    * replayed micro-batch is self-healing (its keys are already
-    * indexed, so re-delivery appends nothing to the output).
-    */
   /** Native BOUNDED-STATE streaming dedup: first occurrence per key
     * wins, duplicates arriving within the watermark delay are
     * dropped, and the state store evicts each key once the watermark
@@ -314,243 +310,61 @@ object Streams {
     stream.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  def dedupIngest(stream: DataFrame, key: Column, idCol: String,
-                  indexPath: String, outPath: String,
-                  checkpoint: String): StreamingQuery = {
+  /** The micro-batch runner under every index-backed `*Ingest` face
+    * below: each face is only its batch body. The contract, stated
+    * once for all of them:
+    *
+    *  - Loop: the query checkpoints at `checkpoint` and runs each
+    *    micro-batch through `body` (foreachBatch); `ingest` returns
+    *    once all input available at start is processed, and the
+    *    caller stops the query.
+    *  - Empty batches are skipped (one `LIMIT 1` job decides): no
+    *    index is resolved or read, nothing is written.
+    *  - Sink: [[Batch.emit]] OVERWRITES the batch's own `batch_id=N`
+    *    partition (dynamic partition overwrite), with the batch id as
+    *    a provenance column. foreachBatch is at-least-once; a crash
+    *    between the write and the checkpoint commit replays the batch
+    *    under the SAME id, and the overwrite rewrites that partition
+    *    in place instead of appending a duplicate. Source-level
+    *    REdelivery is a NEW batch id: a face that scores without
+    *    deduping against an index emits value-identical rows into a
+    *    second partition (scoring is deterministic for a given index
+    *    version), so its consumers dedup on the row id at read.
+    *  - Replay tag: [[Batch.tag]] ([[batchTag]]) names the (stream,
+    *    batch) stably across restarts. Faces hand it to tagged index
+    *    appends (a replay commits nothing twice) and to read-side
+    *    exclusions (a replay never scores against its own append). It
+    *    is lazy, so a face that never uses it never reads the
+    *    checkpoint metadata.
+    */
+  private def ingest(stream: DataFrame, checkpoint: String)
+                    (body: Batch => Unit): StreamingQuery = {
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch.withColumn("_key", key)
-        val idx =
-          try spark.read.parquet(indexPath)
-          catch { case _: Throwable => keyed.select(col("_key")).limit(0) }
-        val keepIds = keyed
-          .groupBy(col("_key"))
-          .agg(org.apache.spark.sql.functions.min(col(idCol)).as("_keep"))
-          .join(idx, Seq("_key"), "left_anti")
-          .select(col("_keep"))
-        val survivors = keyed
-          .join(keepIds, keyed(idCol) === col("_keep"))
-          .drop("_keep")
-          .persist() // two writes below — evaluate the joins once
-        try {
-          survivors.drop("_key").write.mode("append").parquet(outPath)
-          survivors.select(col("_key")).write.mode("append").parquet(indexPath)
-        } finally { survivors.unpersist(); () }
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        if (!df.isEmpty) body(new Batch(df, id, checkpoint))
       }
       .start()
     q.processAllAvailable()
     q
   }
 
-  /** Continuous ANN scoring: each micro-batch of embeddings is scored
-    * against a PREBUILT IVF index ([[graft.functions.Ivf.writeIndex]])
-    * and the top-k neighbors appended to `outPath` — the
-    * ingest-vs-index split every production similarity pipeline has:
-    * the index builds offline at corpus scale, the stream pays only
-    * nprobe/cells of it per batch (partition pruning on the
-    * cell-partitioned index), and [[graft.operators.Versioned]] lets
-    * an index rebuild land mid-stream without breaking in-flight
-    * batches.
-    *
-    * Exactly-once to the sink: a blind `append` would duplicate a
-    * batch replayed after a crash between write and checkpoint commit
-    * (foreachBatch is at-least-once). Each batch instead OVERWRITES
-    * its own `batch_id=N` partition (dynamic partition overwrite), so
-    * a replay rewrites the same rows in place. The batch id rides
-    * along as a provenance column; readers who don't want it drop it.
+  /** One non-empty micro-batch of an [[ingest]] face: its rows `df`,
+    * its batch `id` and its session.
     */
-  def annScoreIngest(stream: DataFrame, indexPath: String, outPath: String,
-                     checkpoint: String, k: Int = 10,
-                     nprobe: Int = 4): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.Ivf
-            .ivfTopKIndexed(batch.sparkSession, indexPath, batch,
-              k = k, nprobe = nprobe)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+  private final class Batch(val df: DataFrame, val id: Long, checkpoint: String) {
+    val spark: SparkSession = df.sparkSession
 
-  /** The full streaming corpus-curation loop over a persisted ANN
-    * index: every micro-batch is (1) DEDUPED against the index —
-    * id-level, deterministic first-delivery-wins, the anti-join inside
-    * [[graft.functions.Ivf.appendToIndex]]; (2) APPENDED — survivors
-    * land as an O(batch) delta inside the current index version; and
-    * (3) SCORED — the batch's top-k neighbors against the just-grown
-    * index go to `outPath`, overwriting their own `batch_id=N`
-    * partition (same exactly-once shape as [[annScoreIngest]]).
-    *
-    * Crash/replay semantics: a replayed batch appends nothing (its ids
-    * are already indexed — self-healing at-least-once) and rescores
-    * against whatever the index holds by then, which may include later
-    * batches — scores are at-least-as-current as the original attempt,
-    * never lost. The index stays single-writer ([[graft.operators
-    * .Versioned]] `_LOCK`): one ingest stream per index, and pause it
-    * around [[graft.functions.Ivf.compactIndex]] maintenance.
-    */
-  def indexGrowIngest(stream: DataFrame, indexPath: String, outPath: String,
-                      checkpoint: String, k: Int = 10, nprobe: Int = 4,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.Ivf.appendToIndex(batch, indexPath, idCol, vecCol)
-          graft.functions.Ivf
-            .ivfTopKIndexed(batch.sparkSession, indexPath, batch,
-              k = k, nprobe = nprobe, idCol = idCol, vecCol = vecCol)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+    /** The replay tag (see [[ingest]]). */
+    lazy val tag: String = batchTag(spark, checkpoint, id)
 
-  /** Streaming decontamination: each micro-batch of documents is
-    * scored for k-gram overlap against a PERSISTED benchmark gram
-    * index ([[graft.functions.Curation.writeDecontamIndex]] — the
-    * distinct 64-bit gram hashes of the eval suites, under a
-    * [[graft.operators.Versioned]] root so a benchmark refresh lands
-    * atomically mid-stream) and the per-doc overlap rows go to
-    * `outPath` — the release-gate scan run continuously at ingest
-    * time instead of once before a release. The index is resolved
-    * per batch, so a new benchmark version applies from the next
-    * micro-batch on.
-    *
-    * Scale shape: identical to the batch operator — the gram index is
-    * eval-suite-sized (MBs) and broadcast, the batch side reduces to
-    * 8-byte hashes in its scan stage, nothing about the corpus is
-    * kept in the state store. Exactly-once to the sink via the same
-    * `batch_id=N` dynamic-partition overwrite as [[annScoreIngest]]:
-    * a replayed batch rewrites its own partition against the
-    * then-current index (at-least-as-current as the lost attempt).
-    *
-    * Exactly-once covers CHECKPOINT replays — a crash between the
-    * sink write and the commit re-runs the batch under the SAME
-    * batch_id and the overwrite rewrites that partition in place.
-    * Source-level REdelivery is weaker: the same documents arriving
-    * again form a NEW batch_id, so `outPath` can hold duplicate
-    * per-doc rows across batch_id partitions. Rows are idempotent BY
-    * VALUE (scoring is deterministic for a given index version), so
-    * consumers reading an at-least-once-fed `outPath` must dedup on
-    * the doc id at read (`dropDuplicates(idCol)`).
-    */
-  def decontamIngest(stream: DataFrame, gramIndexPath: String, outPath: String,
-                     checkpoint: String, idCol: String = "doc_id",
-                     textCol: String = "text", k: Int = 5): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val vdir = graft.operators.Versioned.resolve(spark, gramIndexPath)
-            .getOrElse(throw new IllegalStateException(
-              s"no committed benchmark gram index at $gramIndexPath — " +
-                "build one with Curation.writeDecontamIndex first"))
-          graft.functions.Curation
-            .decontamOverlapGrams(batch,
-              graft.functions.Curation.readDecontamIndex(spark, vdir),
-              idCol, textCol, k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
-
-  /** Streaming span-level dedup: each micro-batch of documents is
-    * scored against a PERSISTED span-hash index
-    * ([[graft.functions.Dedup.writeSpanIndex]]) — per-doc
-    * (id, n_spans, n_dup, dup_frac) where a span is duplicated iff it
-    * is already in the index or held by ≥2 docs within the batch —
-    * and the index then grows by the batch's NEW span hashes as an
-    * O(batch) `Versioned.commitDelta` append (never a rebuild). The
-    * span-granularity sibling of the exact-dedup ingest loop: ingest
-    * scores against history, history grows by the batch.
-    *
-    * One pass per micro-batch: the index is read ONCE, as one scan
-    * ([[graft.functions.Dedup.readSpanIndex]]), by the persisted span
-    * probe ([[graft.functions.Dedup.spanProbe]]); the scores and the
-    * append (the probe's spans with no index match) both derive from
-    * it, so the append never re-reads the index.
-    *
-    * Exactly-once: output goes through the same `batch_id=N`
-    * dynamic-partition overwrite as [[decontamIngest]]. The probe
-    * reads the PRE-append view (this batch's own tagged delta
-    * excluded), so a checkpoint replay re-scores identically, and the
-    * append commits only if no live delta carries this batch's tag —
-    * checked under the writer lock
-    * ([[graft.functions.Dedup.commitFreshHashes]]) — so nothing is
-    * appended twice. Source-level REdelivery of a document (new
-    * batch_id) scores it against an index that already holds its
-    * spans → dup_frac 1.0, which is exactly the keep-first verdict
-    * incremental dedup gives re-ingested content.
-    */
-  def spanDedupIngest(stream: DataFrame, spanIndexPath: String, outPath: String,
-                      checkpoint: String, idCol: String = "doc_id",
-                      textCol: String = "text", k: Int = 8): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val vdir = graft.operators.Versioned.resolve(spark, spanIndexPath)
-            .getOrElse(throw new IllegalStateException(
-              s"no committed span index at $spanIndexPath — " +
-                "build one with Dedup.writeSpanIndex first"))
-          // scoring reads the PRE-APPEND view: the batch's own delta
-          // (tagged below) is excluded, so a checkpoint replay that
-          // crashed between the append and the checkpoint commit
-          // re-scores identically instead of matching its own spans
-          // (which would overwrite the partition with dup_frac = 1.0)
-          val tag = batchTag(spark, checkpoint, batchId)
-          val dd = graft.functions.Dedup
-          // the probe is persisted: the scorer and the index append
-          // both consume it, so the index is scanned once per batch
-          val probe = dd.spanProbe(dd.spanRows(batch, idCol, textCol, k),
-              dd.readSpanIndex(spark, vdir, excludeTag = Some(tag)))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-          try {
-            dd.spanScores(probe, idCol)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-            // O(batch) index growth, guarded by the batch's own tag
-            val fresh = dd.unmatchedSpans(probe)
-            if (!fresh.isEmpty)
-              dd.commitFreshHashes(spark, spanIndexPath, vdir, fresh, Some(tag))
-          } finally { probe.unpersist(); () }
-          ()
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
+    /** Overwrite this batch's `batch_id=N` partition of `outPath`. */
+    def emit(rows: DataFrame, outPath: String): Unit =
+      rows.withColumn("batch_id", lit(id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(outPath)
   }
 
   /** Delta tag for one (stream, micro-batch). The stream identity is
@@ -596,6 +410,216 @@ object Streams {
     s"${id}_b$batchId"
   }
 
+  /** The tagged-delta skeleton of the faces whose sink rows derive
+    * from the batch's own index delta (graph, cluster, coreness,
+    * linkage, simjoin): `append` commits the batch's delta under
+    * [[Batch.tag]], first-delivery-wins (already-indexed ids drop),
+    * and returns its dir — None when it committed nothing; `derive`
+    * turns a delta dir into the rows [[Batch.emit]] lands.
+    *
+    * The crash window between the delta commit and the sink write
+    * heals by the tag: the replayed batch's append commits nothing,
+    * so the skeleton re-locates the delta carrying ITS tag through
+    * the family's `heal` lookup (its `deltaByTag`, compaction-proof
+    * via [[graft.operators.TagHeal]]) and re-runs `derive` — whose
+    * output must be content-identical from the same inputs (true for
+    * a plain delta read and for the Cluster/CorenessIndex
+    * updateFromDelta recomputation) — so the partition rewrite is
+    * idempotent. A plain source redelivery carries a new tag, finds
+    * nothing, and emits nothing; with no committed index there is
+    * nothing to heal from, and the batch emits nothing.
+    */
+  private def taggedDeltaIngest(stream: DataFrame, indexPath: String,
+                                heal: (SparkSession, String, String) => Option[String],
+                                outPath: String, checkpoint: String)
+                               (append: Batch => Option[String])
+                               (derive: (SparkSession, String) => DataFrame)
+                               : StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      def emit(deltaDir: String): Unit = b.emit(derive(b.spark, deltaDir), outPath)
+      append(b) match {
+        case Some(deltaDir) => emit(deltaDir)
+        case None =>
+          Versioned.resolve(b.spark, indexPath).foreach { vdir =>
+            heal(b.spark, vdir, b.tag).foreach(emit)
+          }
+      }
+    }
+
+  /** Streaming incremental corpus ingest: every micro-batch keeps only
+    * first occurrences (min `idCol` per `key`) that are NOT already in
+    * the parquet-backed key index, appends the survivors to `outPath`
+    * and their keys to `indexPath` — [[graft.functions.Dedup.incremental]]
+    * as a continuously-running pipeline. The index is the only state
+    * and it lives in files, not the state store: at 100 TB the
+    * anti-join is a hash join against a bucketed key table.
+    *
+    * Runs on [[ingest]] (empty batches are skipped), but its sink is a
+    * plain APPEND, not the `batch_id=N` overwrite, and the output and
+    * the index are two separate appends. A replay after both landed
+    * appends nothing (its keys are already indexed); a crash BETWEEN
+    * the two writes replays a batch whose keys are not yet indexed,
+    * so its survivors are appended to `outPath` again — duplicate
+    * output rows, which consumers dedup on `idCol`.
+    *
+    * Only a MISSING index path reads as the empty index (before the
+    * first append). An index that exists but cannot be read fails the
+    * batch: read as empty, it would let every earlier key through
+    * again.
+    */
+  def dedupIngest(stream: DataFrame, key: Column, idCol: String,
+                  indexPath: String, outPath: String,
+                  checkpoint: String): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val keyed = b.df.withColumn("_key", key)
+      val keys = keyed.select(col("_key"))
+      val ip = new org.apache.hadoop.fs.Path(indexPath)
+      val idx =
+        if (ip.getFileSystem(b.spark.sessionState.newHadoopConf()).exists(ip))
+          b.spark.read.schema(keys.schema).parquet(indexPath)
+        else keys.limit(0)
+      val keepIds = keyed
+        .groupBy(col("_key"))
+        .agg(min(col(idCol)).as("_keep"))
+        .join(idx, Seq("_key"), "left_anti")
+        .select(col("_keep"))
+      val survivors = keyed
+        .join(keepIds, keyed(idCol) === col("_keep"))
+        .drop("_keep")
+        .persist() // two writes below — evaluate the joins once
+      try {
+        survivors.drop("_key").write.mode("append").parquet(outPath)
+        survivors.select(col("_key")).write.mode("append").parquet(indexPath)
+      } finally { survivors.unpersist(); () }
+    }
+
+  /** Continuous ANN scoring: each micro-batch of embeddings is scored
+    * against a PREBUILT IVF index ([[graft.functions.Ivf.writeIndex]])
+    * and the top-k neighbors land under the batch's `batch_id=N`
+    * partition of `outPath` ([[ingest]]) — the ingest-vs-index split
+    * every production similarity pipeline has: the index builds
+    * offline at corpus scale, the stream pays only nprobe/cells of it
+    * per batch (partition pruning on the cell-partitioned index), and
+    * [[graft.operators.Versioned]] lets an index rebuild land
+    * mid-stream without breaking in-flight batches.
+    */
+  def annScoreIngest(stream: DataFrame, indexPath: String, outPath: String,
+                     checkpoint: String, k: Int = 10,
+                     nprobe: Int = 4): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      b.emit(Ivf.ivfTopKIndexed(b.spark, indexPath, b.df, k = k, nprobe = nprobe),
+        outPath)
+    }
+
+  /** The full streaming corpus-curation loop over a persisted ANN
+    * index: every micro-batch is (1) DEDUPED against the index —
+    * id-level, deterministic first-delivery-wins, the anti-join inside
+    * [[graft.functions.Ivf.appendToIndex]]; (2) APPENDED — survivors
+    * land as an O(batch) delta inside the current index version; and
+    * (3) SCORED — the batch's top-k neighbors against the just-grown
+    * index go to `outPath` under the [[ingest]] sink.
+    *
+    * Crash/replay semantics: a replayed batch appends nothing (its ids
+    * are already indexed — self-healing at-least-once) and rescores
+    * against whatever the index holds by then, which may include later
+    * batches — scores are at-least-as-current as the original attempt,
+    * never lost. The index stays single-writer ([[graft.operators
+    * .Versioned]] `_LOCK`): one ingest stream per index, and pause it
+    * around [[graft.functions.Ivf.compactIndex]] maintenance.
+    */
+  def indexGrowIngest(stream: DataFrame, indexPath: String, outPath: String,
+                      checkpoint: String, k: Int = 10, nprobe: Int = 4,
+                      idCol: String = "vec_id",
+                      vecCol: String = "embedding"): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      Ivf.appendToIndex(b.df, indexPath, idCol, vecCol)
+      b.emit(Ivf.ivfTopKIndexed(b.spark, indexPath, b.df, k = k, nprobe = nprobe,
+        idCol = idCol, vecCol = vecCol), outPath)
+    }
+
+  /** Streaming decontamination: each micro-batch of documents is
+    * scored for k-gram overlap against a PERSISTED benchmark gram
+    * index ([[graft.functions.Curation.writeDecontamIndex]] — the
+    * distinct 64-bit gram hashes of the eval suites, under a
+    * [[graft.operators.Versioned]] root so a benchmark refresh lands
+    * atomically mid-stream) and the per-doc overlap rows go to
+    * `outPath` — the release-gate scan run continuously at ingest
+    * time instead of once before a release. The index is resolved
+    * per batch, so a new benchmark version applies from the next
+    * micro-batch on.
+    *
+    * Scale shape: identical to the batch operator — the gram index is
+    * eval-suite-sized (MBs) and broadcast, the batch side reduces to
+    * 8-byte hashes in its scan stage, nothing about the corpus is
+    * kept in the state store. Exactly-once to the sink is the
+    * [[ingest]] contract: a checkpoint replay rewrites its own
+    * partition against the then-current index (at-least-as-current
+    * as the lost attempt); a source-level redelivery lands in a new
+    * partition, so consumers of an at-least-once-fed `outPath` dedup
+    * on the doc id at read (`dropDuplicates(idCol)`).
+    */
+  def decontamIngest(stream: DataFrame, gramIndexPath: String, outPath: String,
+                     checkpoint: String, idCol: String = "doc_id",
+                     textCol: String = "text", k: Int = 5): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, gramIndexPath,
+        "benchmark gram index (Curation.writeDecontamIndex)")
+      b.emit(Curation.decontamOverlapGrams(b.df,
+        Curation.readDecontamIndex(b.spark, vdir), idCol, textCol, k), outPath)
+    }
+
+  /** Streaming span-level dedup: each micro-batch of documents is
+    * scored against a PERSISTED span-hash index
+    * ([[graft.functions.Dedup.writeSpanIndex]]) — per-doc
+    * (id, n_spans, n_dup, dup_frac) where a span is duplicated iff it
+    * is already in the index or held by ≥2 docs within the batch —
+    * and the index then grows by the batch's NEW span hashes as an
+    * O(batch) `Versioned.commitDelta` append (never a rebuild). The
+    * span-granularity sibling of the exact-dedup ingest loop: ingest
+    * scores against history, history grows by the batch.
+    *
+    * One pass per micro-batch: the index is read ONCE, as one scan
+    * ([[graft.functions.Dedup.readSpanIndex]]), by the persisted span
+    * probe ([[graft.functions.Dedup.spanProbe]]); the scores and the
+    * append (the probe's spans with no index match) both derive from
+    * it, so the append never re-reads the index.
+    *
+    * Exactly-once: output goes through the [[ingest]] sink. The probe
+    * reads the PRE-append view (this batch's own tagged delta
+    * excluded), so a checkpoint replay re-scores identically, and the
+    * append commits only if no live delta carries this batch's tag —
+    * checked under the writer lock
+    * ([[graft.functions.Dedup.commitFreshHashes]]) — so nothing is
+    * appended twice. Source-level REdelivery of a document (new
+    * batch_id) scores it against an index that already holds its
+    * spans → dup_frac 1.0, which is exactly the keep-first verdict
+    * incremental dedup gives re-ingested content.
+    */
+  def spanDedupIngest(stream: DataFrame, spanIndexPath: String, outPath: String,
+                      checkpoint: String, idCol: String = "doc_id",
+                      textCol: String = "text", k: Int = 8): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, spanIndexPath,
+        "span index (Dedup.writeSpanIndex)")
+      // scoring reads the PRE-APPEND view: the batch's own delta
+      // (tagged below) is excluded, so a checkpoint replay that
+      // crashed between the append and the checkpoint commit
+      // re-scores identically instead of matching its own spans
+      // (which would overwrite the partition with dup_frac = 1.0).
+      // The probe is persisted: the scorer and the index append both
+      // consume it, so the index is scanned once per batch
+      val probe = Dedup.spanProbe(Dedup.spanRows(b.df, idCol, textCol, k),
+          Dedup.readSpanIndex(b.spark, vdir, excludeTag = Some(b.tag)))
+        .persist(StorageLevel.MEMORY_ONLY)
+      try {
+        b.emit(Dedup.spanScores(probe, idCol), outPath)
+        // O(batch) index growth, guarded by the batch's own tag
+        val fresh = Dedup.unmatchedSpans(probe)
+        if (!fresh.isEmpty)
+          Dedup.commitFreshHashes(b.spark, spanIndexPath, vdir, fresh, Some(b.tag))
+      } finally { probe.unpersist(); () }
+    }
+
   /** Streaming curation funnel — the online face of q_curate_e2e:
     * each micro-batch of documents runs quality scoring → language
     * gate → exact dedup against a persisted seen-hash index → span
@@ -603,7 +627,8 @@ object Streams {
     * perplexity gate, then grows both indexes by O(batch). Kept docs
     * land under `outPath/batch_id=N`; per-batch funnel-stage counts
     * (the streaming form of the batch query's Observe tripwires) land
-    * as one row under `statsPath/batch_id=N`.
+    * as one row under `statsPath/batch_id=N` (both through the
+    * [[ingest]] sink).
     *
     * LM gate (`lmModelPath`): documents are scored against a FROZEN
     * reference unigram LM ([[graft.functions.Curation.writeLmModel]])
@@ -671,136 +696,114 @@ object Streams {
                    textCol: String = "text", minWords: Int = 10,
                    maxDupFrac: Double = 0.5, spanK: Int = 8,
                    lmModelPath: Option[String] = None,
-                   maxAvgNll: Double = graft.functions.Curation.CurateNllMax)
+                   maxAvgNll: Double = Curation.CurateNllMax)
       : StreamingQuery = {
     require(minWords >= spanK,
       s"minWords ($minWords) must be ≥ spanK ($spanK): every doc past the " +
         "quality gate must produce at least one full span")
     // pin the LM VERSION once, at stream start (see the scaladoc)
-    val lmVersionDir = lmModelPath.map { p =>
-      graft.operators.Versioned.resolve(stream.sparkSession, p)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed LM model at $p — build one with Curation.writeLmModel"))
-    }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          def vdir(p: String) = graft.operators.Versioned.resolve(spark, p)
-            .getOrElse(throw new IllegalStateException(
-              s"no committed index at $p — bootstrap with Dedup.writeHashIndex"))
-          val (exactV, spanV) = (vdir(exactIndexPath), vdir(spanIndexPath))
-          // both reads exclude this batch's own (tagged) deltas, so a
-          // checkpoint replay AFTER either append recomputes the same
-          // kept set and stats as the original run — the output
-          // overwrite is then value-identical and the missing second
-          // append (if the crash fell between the two) finally lands
-          val tag = batchTag(spark, checkpoint, batchId)
-          val ta = graft.functions.TextAnalysis
-          val dd = graft.functions.Dedup
-          val memory = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-          // 128-bit md5 text keys — the batch funnel's (and
-          // Dedup.exact's) width: a PERMANENT drop decision at corpus
-          // scale cannot ride a 64-bit key's birthday bound
-          val scored = batch
-            .select(col(idCol), col(textCol),
-              ta.nWords(col(textCol)).as("n_words"),
-              ta.langIdScored(col(textCol)).as("lang_guess"),
-              unhex(md5(col(textCol).cast("binary"))).as("h"))
+    val lmVersionDir = lmModelPath.map(p => Versioned.committed(
+      stream.sparkSession, p, "LM model (Curation.writeLmModel)"))
+    ingest(stream, checkpoint) { b =>
+      val spark = b.spark
+      def vdir(p: String) =
+        Versioned.committed(spark, p, "hash index (Dedup.writeHashIndex)")
+      val (exactV, spanV) = (vdir(exactIndexPath), vdir(spanIndexPath))
+      // both reads exclude this batch's own (tagged) deltas, so a
+      // checkpoint replay AFTER either append recomputes the same
+      // kept set and stats as the original run — the output
+      // overwrite is then value-identical and the missing second
+      // append (if the crash fell between the two) finally lands
+      val tag = Some(b.tag)
+      val memory = StorageLevel.MEMORY_ONLY
+      // 128-bit md5 text keys — the batch funnel's (and
+      // Dedup.exact's) width: a PERMANENT drop decision at corpus
+      // scale cannot ride a 64-bit key's birthday bound
+      val scored = b.df
+        .select(col(idCol), col(textCol),
+          TextAnalysis.nWords(col(textCol)).as("n_words"),
+          TextAnalysis.langIdScored(col(textCol)).as("lang_guess"),
+          unhex(md5(col(textCol).cast("binary"))).as("h"))
+        .persist(memory)
+      try {
+        val passes = col("n_words") >= minWords && col("lang_guess") =!= "unk"
+        val sc = scored.agg(count(lit(1)), count(when(passes, 1))).head()
+        val (nScored, nFiltered) = (sc.getLong(0), sc.getLong(1))
+        val filtered = scored.filter(passes)
+        // exact dedup: first-id-wins within the batch, then drop
+        // anything some earlier batch already holds (index side is
+        // unbounded → merge, never a planner broadcast)
+        val firsts = filtered.groupBy("h").agg(min(col(idCol)).as("_keep"))
+        val seen = Dedup.readHashIndex(spark, exactV, excludeTag = tag,
+          schema = Some(Dedup.Md5IndexSchema))
+        val kept = filtered
+          .join(firsts, Seq("h")).filter(col(idCol) === col("_keep"))
+          .join(seen.hint("merge"), Seq("h"), "left_anti")
+          .drop("_keep")
+          .persist(memory)
+        try {
+          // the span probe (persisted) feeds both the trim scores
+          // and the span index append
+          val probe = Dedup.spanProbe(Dedup.spanRows(kept, idCol, textCol, spanK),
+              Dedup.readSpanIndex(spark, spanV, excludeTag = tag))
+            .persist(memory)
+          // every kept doc, with its span score (a doc with no full
+          // span scores null and is not trimmed in)
+          val scoredKept = kept
+            .join(Dedup.spanScores(probe, idCol)
+              .select(col(idCol), col("dup_frac")).hint("merge"), Seq(idCol), "left")
+          val trimPass = coalesce(col("dup_frac") <= maxDupFrac, lit(false))
+          // optional LM gate against the PINNED frozen model (see
+          // scaladoc): per-doc mean NLL over in-vocab tokens,
+          // r6-rounded like the batch funnel; OOV-only docs score
+          // null and fail the gate
+          val (withNll, lmPass) = lmVersionDir match {
+            case None =>
+              (scoredKept.withColumn("avg_nll", lit(null).cast("double")), lit(true))
+            case Some(vd) =>
+              val model = Curation.readLmModel(spark, vd)
+              val nll = kept
+                .select(col(idCol), explode(Dedup.tokens(col(textCol))).as("t"))
+                .join(broadcast(model), "t")
+                .groupBy(idCol)
+                .agg(graft.functions.EngineNeutral.roundHalfUp(avg("nll"), 6)
+                  .as("avg_nll"))
+              (scoredKept.join(nll.hint("merge"), Seq(idCol), "left"),
+                col("avg_nll").isNotNull && col("avg_nll") <= maxAvgNll)
+          }
+          // the pre-gate frame (persisted): one aggregate counts
+          // kept, trimmed and LM-kept rows, then the gated rows are
+          // written once from it
+          val preGate = withNll
+            .select(col(idCol), col("lang_guess"), col("n_words"),
+              col("dup_frac"), col("avg_nll"), trimPass.as("_trim"),
+              (trimPass && lmPass).as("_pass"))
             .persist(memory)
           try {
-            val passes = col("n_words") >= minWords && col("lang_guess") =!= "unk"
-            val sc = scored.agg(count(lit(1)), count(when(passes, 1))).head()
-            val (nScored, nFiltered) = (sc.getLong(0), sc.getLong(1))
-            val filtered = scored.filter(passes)
-            // exact dedup: first-id-wins within the batch, then drop
-            // anything some earlier batch already holds (index side is
-            // unbounded → merge, never a planner broadcast)
-            val firsts = filtered.groupBy("h").agg(min(col(idCol)).as("_keep"))
-            val seen = dd.readHashIndex(spark, exactV, excludeTag = Some(tag),
-              schema = Some(dd.Md5IndexSchema))
-            val kept = filtered
-              .join(firsts, Seq("h")).filter(col(idCol) === col("_keep"))
-              .join(seen.hint("merge"), Seq("h"), "left_anti")
-              .drop("_keep")
-              .persist(memory)
-            try {
-              // the span probe (persisted) feeds both the trim scores
-              // and the span index append
-              val probe = dd.spanProbe(dd.spanRows(kept, idCol, textCol, spanK),
-                  dd.readSpanIndex(spark, spanV, excludeTag = Some(tag)))
-                .persist(memory)
-              // every kept doc, with its span score (a doc with no full
-              // span scores null and is not trimmed in)
-              val scoredKept = kept
-                .join(dd.spanScores(probe, idCol)
-                  .select(col(idCol), col("dup_frac")).hint("merge"), Seq(idCol), "left")
-              val trimPass = coalesce(col("dup_frac") <= maxDupFrac, lit(false))
-              // optional LM gate against the PINNED frozen model (see
-              // scaladoc): per-doc mean NLL over in-vocab tokens,
-              // r6-rounded like the batch funnel; OOV-only docs score
-              // null and fail the gate
-              val (withNll, lmPass) = lmVersionDir match {
-                case None =>
-                  (scoredKept.withColumn("avg_nll", lit(null).cast("double")), lit(true))
-                case Some(vd) =>
-                  val model = graft.functions.Curation.readLmModel(spark, vd)
-                  val nll = kept
-                    .select(col(idCol), explode(dd.tokens(col(textCol))).as("t"))
-                    .join(broadcast(model), "t")
-                    .groupBy(idCol)
-                    .agg(graft.functions.EngineNeutral.roundHalfUp(avg("nll"), 6)
-                      .as("avg_nll"))
-                  (scoredKept.join(nll.hint("merge"), Seq(idCol), "left"),
-                    col("avg_nll").isNotNull && col("avg_nll") <= maxAvgNll)
-              }
-              // the pre-gate frame (persisted): one aggregate counts
-              // kept, trimmed and LM-kept rows, then the gated rows are
-              // written once from it
-              val preGate = withNll
-                .select(col(idCol), col("lang_guess"), col("n_words"),
-                  col("dup_frac"), col("avg_nll"), trimPass.as("_trim"),
-                  (trimPass && lmPass).as("_pass"))
-                .persist(memory)
-              try {
-                val gc = preGate.agg(count(lit(1)), count(when(col("_trim"), 1)),
-                  count(when(col("_pass"), 1))).head()
-                val (nKept, nTrimmed, nLmKept) = (gc.getLong(0), gc.getLong(1), gc.getLong(2))
-                preGate.filter(col("_pass")).drop("_trim", "_pass")
-                  .withColumn("batch_id", lit(batchId))
-                  .write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("batch_id").parquet(outPath)
-                import spark.implicits._
-                Seq((batchId, nScored, nFiltered, nKept, nTrimmed, nLmKept))
-                  .toDF("batch_id", "scored", "filtered", "kept", "trimmed",
-                    "lm_kept")
-                  .write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("batch_id").parquet(statsPath)
-                // O(batch) index growth, funnel-stage-matched (see
-                // doc) and derived from the scoring joins: kept.h is
-                // the quality-passing hashes the exact index lacks,
-                // the unmatched probe spans are the kept docs' spans
-                // the span index lacks; each commits at most once
-                // per batch tag
-                if (nKept > 0)
-                  dd.commitFreshHashes(spark, exactIndexPath, exactV,
-                    kept.select("h"), Some(tag))
-                val freshSpans = dd.unmatchedSpans(probe)
-                if (!freshSpans.isEmpty)
-                  dd.commitFreshHashes(spark, spanIndexPath, spanV, freshSpans,
-                    Some(tag))
-              } finally { preGate.unpersist(); probe.unpersist(); () }
-            } finally kept.unpersist()
-          } finally scored.unpersist()
-          ()
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
+            val gc = preGate.agg(count(lit(1)), count(when(col("_trim"), 1)),
+              count(when(col("_pass"), 1))).head()
+            val (nKept, nTrimmed, nLmKept) = (gc.getLong(0), gc.getLong(1), gc.getLong(2))
+            b.emit(preGate.filter(col("_pass")).drop("_trim", "_pass"), outPath)
+            import spark.implicits._
+            b.emit(Seq((nScored, nFiltered, nKept, nTrimmed, nLmKept))
+              .toDF("scored", "filtered", "kept", "trimmed", "lm_kept"), statsPath)
+            // O(batch) index growth, funnel-stage-matched (see
+            // doc) and derived from the scoring joins: kept.h is
+            // the quality-passing hashes the exact index lacks,
+            // the unmatched probe spans are the kept docs' spans
+            // the span index lacks; each commits at most once
+            // per batch tag
+            if (nKept > 0)
+              Dedup.commitFreshHashes(spark, exactIndexPath, exactV,
+                kept.select("h"), tag)
+            val freshSpans = Dedup.unmatchedSpans(probe)
+            if (!freshSpans.isEmpty)
+              Dedup.commitFreshHashes(spark, spanIndexPath, spanV, freshSpans, tag)
+          } finally { preGate.unpersist(); probe.unpersist(); () }
+        } finally kept.unpersist()
+      } finally scored.unpersist()
+      ()
+    }
   }
 
   /** Streaming semantic dedup: each micro-batch of vectors is judged
@@ -810,43 +813,25 @@ object Streams {
     * then the batch's vectors grow the member set by O(batch) — the
     * online form of q_semdedup, structurally [[spanDedupIngest]] on
     * the embedding side. Per-batch verdicts (id, cluster, dropped) go
-    * to `outPath` under the `batch_id=N` dynamic-partition overwrite;
-    * index growth is the first-delivery-wins anti-join append, so a
-    * checkpoint replay re-scores against the same members it saw
-    * (already-appended ids never match themselves) and commits an
-    * empty delta — verdicts are replay-stable and the index holds one
-    * row per vector id.
+    * to `outPath` through the [[ingest]] sink; index growth is the
+    * first-delivery-wins anti-join append, so a checkpoint replay
+    * re-scores against the same members it saw (already-appended ids
+    * never match themselves) and commits an empty delta — verdicts
+    * are replay-stable and the index holds one row per vector id.
     */
   def semdedupIngest(stream: DataFrame, indexPath: String, outPath: String,
                      checkpoint: String, tau: Double,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-            .getOrElse(throw new IllegalStateException(
-              s"no committed semdedup index at $indexPath — " +
-                "build one with Semdedup.writeIndex first"))
-          val centroids = graft.functions.Semdedup.readCentroidsFrom(spark, vdir)
-          val members = graft.functions.Semdedup.readMembersFrom(spark, vdir)
-          graft.functions.Semdedup
-            .dedupIncrement(batch, members, tau, centroids, idCol, vecCol)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-          graft.functions.Semdedup.appendIndex(batch, indexPath, idCol, vecCol)
-          ()
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                     vecCol: String = "embedding"): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, indexPath,
+        "semdedup index (Semdedup.writeIndex)")
+      val centroids = Semdedup.readCentroidsFrom(b.spark, vdir)
+      val members = Semdedup.readMembersFrom(b.spark, vdir)
+      b.emit(Semdedup.dedupIncrement(b.df, members, tau, centroids, idCol, vecCol),
+        outPath)
+      Semdedup.appendIndex(b.df, indexPath, idCol, vecCol)
+    }
 
   /** Streaming BM25 retrieval: each micro-batch of QUERY documents
     * retrieves its top-k corpus hits from a PERSISTED lexical index
@@ -855,37 +840,19 @@ object Streams {
     * lands atomically mid-stream and applies from the next
     * micro-batch) — the online face of q_bm25, same shape as
     * [[annScoreIngest]] on the embedding side. Per-batch results go
-    * to `outPath` under the `batch_id=N` dynamic-partition overwrite
-    * (checkpoint replays rewrite their own partition; source-level
-    * redelivery produces value-identical rows — scoring is
-    * deterministic for a given index version — so consumers dedup on
-    * the query id at read, as with [[decontamIngest]]).
+    * to `outPath` through the [[ingest]] sink (scoring is
+    * deterministic for a given index version, so consumers dedup
+    * redeliveries on the query id at read).
     */
   def bm25QueryIngest(stream: DataFrame, indexPath: String, outPath: String,
                       checkpoint: String, idCol: String = "doc_id",
-                      textCol: String = "text", topK: Int = 5): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-            .getOrElse(throw new IllegalStateException(
-              s"no committed lexical index at $indexPath — " +
-                "build one with Retrieval.writeLexicalIndex first"))
-          graft.functions.Retrieval
-            .bm25TopKIndexed(spark, vdir, batch, idCol, textCol, topK)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                      textCol: String = "text", topK: Int = 5): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, indexPath,
+        "lexical index (Retrieval.writeLexicalIndex)")
+      b.emit(Retrieval.bm25TopKIndexed(b.spark, vdir, b.df, idCol, textCol, topK),
+        outPath)
+    }
 
   /** Streaming importance scoring: each micro-batch of CANDIDATE
     * documents is scored against a PERSISTED selection model
@@ -898,38 +865,19 @@ object Streams {
     * vocabulary tokens (in NEITHER training pool) take the model's
     * `lr_unseen` scalar. A model retrain lands atomically mid-stream
     * and applies from the next micro-batch (per-batch resolve).
-    * Per-batch results go to `outPath` under the `batch_id=N`
-    * dynamic-partition overwrite — checkpoint replays rewrite their
-    * own partition; source-level redelivery produces value-identical
-    * rows (scoring is deterministic for a given model version), so
-    * consumers dedup on the doc id at read, as with
-    * [[decontamIngest]].
+    * Per-batch results go to `outPath` through the [[ingest]] sink
+    * (scoring is deterministic for a given model version, so
+    * consumers dedup redeliveries on the doc id at read).
     */
   def importanceIngest(stream: DataFrame, modelPath: String, outPath: String,
                        checkpoint: String, idCol: String = "doc_id",
-                       textCol: String = "text"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val vdir = graft.operators.Versioned.resolve(spark, modelPath)
-            .getOrElse(throw new IllegalStateException(
-              s"no committed importance model at $modelPath — " +
-                "build one with Selection.writeImportanceModel first"))
-          graft.functions.Selection
-            .scoreImportanceIndexed(spark, vdir, batch, idCol, textCol)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                       textCol: String = "text"): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, modelPath,
+        "importance model (Selection.writeImportanceModel)")
+      b.emit(Selection.scoreImportanceIndexed(b.spark, vdir, b.df, idCol, textCol),
+        outPath)
+    }
 
   /** Streaming growth of the persisted near-dup GRAPH index
     * ([[graft.functions.GraphIndex]]): each document micro-batch
@@ -937,92 +885,47 @@ object Streams {
     * corpus-global df-band transitions, see the GraphIndex doc — and
     * the batch's RE-JUDGED edge set (every pair the batch could have
     * changed: created, updated, or now-absent support between OLD
-    * docs included) lands at `outPath` under the `batch_id=N`
-    * dynamic-partition overwrite sink.
+    * docs included) lands at `outPath` through the [[ingest]] sink.
     *
-    * Replay-safe by construction: appendIndex drops already-indexed
-    * doc ids (first delivery wins), so a checkpoint replay or source
-    * redelivery commits NO delta and overwrites nothing — the folded
-    * edge set equals a batch rebuild over everything delivered, which
+    * Replay-safe by construction ([[taggedDeltaIngest]]): appendIndex
+    * drops already-indexed doc ids (first delivery wins), so a
+    * checkpoint replay or source redelivery commits NO delta; the
+    * replay re-emits its own tagged delta's edges — the folded edge
+    * set equals a batch rebuild over everything delivered, which
     * GraphIndexSpec pins through a channel-driven run.
     */
   def graphIngest(stream: DataFrame, indexPath: String, outPath: String,
                   checkpoint: String, idCol: String = "doc_id",
                   textCol: String = "text"): StreamingQuery =
-    graphDerivedIngest(stream, indexPath, outPath, checkpoint, idCol, textCol) {
+    taggedDeltaIngest(stream, indexPath, GraphIndex.deltaByTag, outPath, checkpoint)(
+        b => GraphIndex.appendIndex(b.df, idCol, textCol, indexPath, Some(b.tag))) {
       (spark, deltaDir) => spark.read.parquet(s"$deltaDir/edges")
     }
-
-  /** The shared skeleton of the three graph-backed ingest faces
-    * (graphIngest / clusterIngest / corenessIngest): append the
-    * batch's graph delta first-delivery-wins, derive the rows to emit
-    * from that delta via `derive`, and land them under the
-    * `batch_id=N` dynamic-partition overwrite sink. The crash window
-    * between the graph commit and the sink write heals by the batch
-    * tag: the replayed batch re-locates ITS graph delta and re-runs
-    * `derive` — whose output must be content-identical from the same
-    * inputs (true for a plain delta read and for the
-    * Cluster/CorenessIndex updateFromDelta recomputation) — so the
-    * partition rewrite is idempotent. A plain source redelivery
-    * carries a new tag, finds nothing, and emits nothing.
-    */
-  private def graphDerivedIngest(stream: DataFrame, graphPath: String,
-                                 outPath: String, checkpoint: String,
-                                 idCol: String, textCol: String)
-                                (derive: (SparkSession, String) => DataFrame)
-                                : StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          def emit(graphDelta: String): Unit =
-            derive(spark, graphDelta)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-          graft.functions.GraphIndex
-            .appendIndex(batch, idCol, textCol, graphPath, Some(tag)) match {
-            case Some(deltaDir) => emit(deltaDir)
-            case None =>
-              graft.operators.Versioned.resolve(spark, graphPath).foreach { vdir =>
-                graft.functions.GraphIndex.deltaByTag(spark, vdir, tag).foreach(emit)
-              }
-          }
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
 
   /** Streaming growth of graph index AND the derived cluster
     * labeling ([[graft.functions.ClusterIndex]]): each document
     * micro-batch appends its graph delta, then re-labels exactly the
     * touched components, and the batch's revised (id, label) rows
-    * land at `outPath` under the `batch_id=N` dynamic-partition
-    * overwrite sink — so near-dup cluster membership stays a lookup
-    * while the corpus streams in.
+    * land at `outPath` through the [[ingest]] sink — so near-dup
+    * cluster membership stays a lookup while the corpus streams in.
     *
-    * Replay discipline: the graph append is first-delivery-wins, so a
-    * plain redelivery commits nothing and emits nothing. The crash
-    * window between the graph commit and the cluster update heals by
-    * the batch tag: the replayed batch re-locates ITS graph delta and
-    * re-runs the cluster update — updateFromDelta recomputes the same
-    * labels from the same inputs, so the duplicate cluster delta is
-    * content-identical and last-writer-wins folding is unchanged.
+    * Replay discipline ([[taggedDeltaIngest]]): the graph append is
+    * first-delivery-wins, so a plain redelivery commits nothing and
+    * emits nothing. The crash window between the graph commit and
+    * the cluster update heals by the batch tag: the replayed batch
+    * re-locates ITS graph delta and re-runs the cluster update —
+    * updateFromDelta recomputes the same labels from the same inputs,
+    * so the duplicate cluster delta is content-identical and
+    * last-writer-wins folding is unchanged.
     */
   def clusterIngest(stream: DataFrame, graphPath: String, clusterPath: String,
                     outPath: String, checkpoint: String,
                     idCol: String = "doc_id",
                     textCol: String = "text"): StreamingQuery =
-    graphDerivedIngest(stream, graphPath, outPath, checkpoint, idCol, textCol) {
+    taggedDeltaIngest(stream, graphPath, GraphIndex.deltaByTag, outPath, checkpoint)(
+        b => GraphIndex.appendIndex(b.df, idCol, textCol, graphPath, Some(b.tag))) {
       (spark, graphDelta) =>
-        val cd = graft.functions.ClusterIndex
-          .updateFromDelta(spark, graphPath, clusterPath, graphDelta)
+        val cd = ClusterIndex.updateFromDelta(spark, graphPath, clusterPath, graphDelta)
         spark.read.parquet(s"$cd/labels")
     }
 
@@ -1032,9 +935,9 @@ object Streams {
     * touched components (coreness is component-local — the
     * [[graft.functions.ClusterIndex]] closure argument carries over),
     * and the batch's revised (id, label, coreness) rows land at
-    * `outPath` under the `batch_id=N` dynamic-partition overwrite
-    * sink — the density-governance number stays a label lookup while
-    * the corpus streams in, never a per-run corpus-scale fixpoint.
+    * `outPath` through the [[ingest]] sink — the density-governance
+    * number stays a label lookup while the corpus streams in, never
+    * a per-run corpus-scale fixpoint.
     *
     * Replay discipline (the clusterIngest convention exactly): the
     * graph append is first-delivery-wins, so a plain redelivery
@@ -1048,45 +951,24 @@ object Streams {
                      corenessPath: String, outPath: String,
                      checkpoint: String, idCol: String = "doc_id",
                      textCol: String = "text"): StreamingQuery =
-    graphDerivedIngest(stream, graphPath, outPath, checkpoint, idCol, textCol) {
+    taggedDeltaIngest(stream, graphPath, GraphIndex.deltaByTag, outPath, checkpoint)(
+        b => GraphIndex.appendIndex(b.df, idCol, textCol, graphPath, Some(b.tag))) {
       (spark, graphDelta) =>
-        val cd = graft.functions.CorenessIndex
-          .updateFromDelta(spark, graphPath, corenessPath, graphDelta)
+        val cd = CorenessIndex.updateFromDelta(spark, graphPath, corenessPath, graphDelta)
         spark.read.parquet(s"$cd/labels")
     }
 
-  /** Streaming growth of the persisted record-linkage index
-    * ([[graft.functions.LinkageIndex]]): each micro-batch of records
-    * appends in O(batch + touched buckets) — the batch's
-    * deletion-neighborhood keys probe only the buckets they touch,
-    * only pairs with a fresh side verify — and the batch's NEW
-    * verified (id_a, id_b, dist) pairs land at `outPath` under the
-    * `batch_id=N` dynamic-partition overwrite sink. A production
-    * linkage pipeline is incremental by nature: matches surface as
-    * records arrive, and [[graft.functions.LinkageIndex.readPairs]]
-    * stays the always-current serve.
-    *
-    * Replay discipline (the graphIngest convention): the append is
-    * first-delivery-wins (already-indexed ids drop), so a plain
-    * redelivery commits nothing and emits nothing; the crash window
-    * between the delta commit and the sink write heals by the batch
-    * tag — the replayed batch re-locates ITS OWN delta
-    * ([[graft.functions.LinkageIndex.deltaByTag]], compaction-proof
-    * via [[graft.operators.TagHeal]]) and rewrites its partition
-    * idempotently.
-    */
   /** Streaming near-dup screening through the persisted MinHash
     * signature index ([[graft.functions.MinhashIndex]], round 18):
     * each document micro-batch is signed once, probed against the
     * CURRENT band table (O(batch + matched buckets) — corpus text
     * never re-scanned), its (id_a = indexed doc, id_b = batch doc,
-    * est_jaccard ≥ minEst) matches land at `outPath` under the
-    * `batch_id=N` dynamic-partition sink, and the batch's signatures
-    * then append as one tagged delta so FUTURE batches dedup against
-    * it.
+    * est_jaccard ≥ minEst) matches land at `outPath` through the
+    * [[ingest]] sink, and the batch's signatures then append as one
+    * tagged delta so FUTURE batches dedup against it.
     *
     * Replay safety: scoring excludes the batch's own tagged delta
-    * (the [[dedupIngest]]/readHashIndex convention), so a crash
+    * (the [[curateIngest]]/readHashIndex convention), so a crash
     * between append and checkpoint commit re-scores the replay
     * identically — never against the batch's own signatures — and
     * the idempotent append (known ids anti-joined) refuses the
@@ -1096,41 +978,22 @@ object Streams {
   def minhashIngest(stream: DataFrame, indexPath: String, outPath: String,
                     checkpoint: String, idCol: String = "doc_id",
                     textCol: String = "text",
-                    minEstJaccard: Double = 0.5): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-            .getOrElse(sys.error(
-              s"minhashIngest needs a committed MinhashIndex at $indexPath " +
-                "(MinhashIndex.writeIndex builds it from the base corpus)"))
-          graft.functions.MinhashIndex
-            .candidates(spark, vdir, batch, idCol, textCol, minEstJaccard,
-              excludeTag = Some(tag))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-          graft.functions.MinhashIndex
-            .appendIndex(spark, indexPath, vdir, batch, idCol, textCol,
-              Some(tag))
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                    minEstJaccard: Double = 0.5): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, indexPath,
+        "minhash index (MinhashIndex.writeIndex)")
+      b.emit(MinhashIndex.candidates(b.spark, vdir, b.df, idCol, textCol,
+        minEstJaccard, excludeTag = Some(b.tag)), outPath)
+      MinhashIndex.appendIndex(b.spark, indexPath, vdir, b.df, idCol, textCol,
+        Some(b.tag))
+    }
 
   /** Streaming near-dup screening through the persisted SimHash index
     * ([[graft.functions.SimhashIndex]], round 18) — the
     * [[minhashIngest]] loop with the pigeonhole-band sketch: each
     * document micro-batch is hashed once, probed against the CURRENT
     * band table (hamming ≤ MaxHamming matches, corpus text never
-    * re-scanned), matches land under the `batch_id=N` sink, and the
+    * re-scanned), matches land through the [[ingest]] sink, and the
     * batch's simhashes append as one tagged delta so FUTURE batches
     * dedup against it. Same replay discipline: scoring excludes the
     * batch's own tagged delta; a redelivered doc self-matches at
@@ -1138,116 +1001,69 @@ object Streams {
     */
   def simhashIngest(stream: DataFrame, indexPath: String, outPath: String,
                     checkpoint: String, idCol: String = "doc_id",
-                    textCol: String = "text"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          val vdir = graft.operators.Versioned.resolve(spark, indexPath)
-            .getOrElse(sys.error(
-              s"simhashIngest needs a committed SimhashIndex at $indexPath " +
-                "(SimhashIndex.writeIndex builds it from the base corpus)"))
-          graft.functions.SimhashIndex
-            .candidates(spark, vdir, batch, idCol, textCol,
-              excludeTag = Some(tag))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-          graft.functions.SimhashIndex
-            .appendIndex(spark, indexPath, vdir, batch, idCol, textCol,
-              Some(tag))
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                    textCol: String = "text"): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      val vdir = Versioned.committed(b.spark, indexPath,
+        "simhash index (SimhashIndex.writeIndex)")
+      b.emit(SimhashIndex.candidates(b.spark, vdir, b.df, idCol, textCol,
+        excludeTag = Some(b.tag)), outPath)
+      SimhashIndex.appendIndex(b.spark, indexPath, vdir, b.df, idCol, textCol,
+        Some(b.tag))
+    }
 
+  /** Streaming growth of the persisted record-linkage index
+    * ([[graft.functions.LinkageIndex]]): each micro-batch of records
+    * appends in O(batch + touched buckets) — the batch's
+    * deletion-neighborhood keys probe only the buckets they touch,
+    * only pairs with a fresh side verify — and the batch's NEW
+    * verified (id_a, id_b, dist) pairs land at `outPath` through the
+    * [[ingest]] sink. A production linkage pipeline is incremental by
+    * nature: matches surface as records arrive, and
+    * [[graft.functions.LinkageIndex.readPairs]] stays the
+    * always-current serve.
+    *
+    * Replay discipline (the graphIngest convention,
+    * [[taggedDeltaIngest]]): the append is first-delivery-wins
+    * (already-indexed ids drop), so a plain redelivery commits
+    * nothing and emits nothing; the crash window between the delta
+    * commit and the sink write heals by the batch tag — the replayed
+    * batch re-locates ITS OWN delta (compaction-proof via
+    * [[graft.operators.TagHeal]]) and rewrites its partition
+    * idempotently.
+    */
   def linkageIngest(stream: DataFrame, indexPath: String, outPath: String,
                     checkpoint: String, idCol: String = "id",
                     nameCol: String = "name",
-                    blockCols: Seq[String] = Seq("block")): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          def emit(deltaDir: String): Unit =
-            spark.read.parquet(s"$deltaDir/pairs")
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-          graft.functions.LinkageIndex
-            .appendIndex(batch, idCol, nameCol, blockCols, indexPath,
-              Some(tag)) match {
-            case Some(deltaDir) => emit(deltaDir)
-            case None =>
-              graft.operators.Versioned.resolve(spark, indexPath).foreach { vdir =>
-                graft.functions.LinkageIndex.deltaByTag(spark, vdir, tag)
-                  .foreach(emit)
-              }
-          }
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                    blockCols: Seq[String] = Seq("block")): StreamingQuery =
+    taggedDeltaIngest(stream, indexPath, LinkageIndex.deltaByTag, outPath, checkpoint)(
+        b => LinkageIndex.appendIndex(b.df, idCol, nameCol, blockCols, indexPath,
+          Some(b.tag))) {
+      (spark, deltaDir) => spark.read.parquet(s"$deltaDir/pairs")
+    }
 
   /** Streaming growth of the persisted similarity-join index
     * ([[graft.functions.SimJoinIndex]]): each document micro-batch
     * appends in O(batch + touched postings) — the batch's prefixes
     * (ranked under the STORED Ω) probe only the postings they touch —
     * and the batch's NEW verified (id_a, id_b, jaccard) pairs land at
-    * `outPath` under the `batch_id=N` sink. Same replay discipline as
+    * `outPath` through the [[ingest]] sink. Same replay discipline as
     * [[linkageIngest]]: first-delivery-wins append, tag-healed crash
     * window, plain redeliveries emit nothing.
     */
   def simjoinIngest(stream: DataFrame, indexPath: String, outPath: String,
                     checkpoint: String, idCol: String = "doc_id",
-                    textCol: String = "text"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          def emit(deltaDir: String): Unit =
-            spark.read.parquet(s"$deltaDir/pairs")
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(outPath)
-          graft.functions.SimJoinIndex
-            .appendIndex(batch, idCol, textCol, indexPath, Some(tag)) match {
-            case Some(deltaDir) => emit(deltaDir)
-            case None =>
-              graft.operators.Versioned.resolve(spark, indexPath).foreach { vdir =>
-                graft.functions.SimJoinIndex.deltaByTag(spark, vdir, tag)
-                  .foreach(emit)
-              }
-          }
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                    textCol: String = "text"): StreamingQuery =
+    taggedDeltaIngest(stream, indexPath, SimJoinIndex.deltaByTag, outPath, checkpoint)(
+        b => SimJoinIndex.appendIndex(b.df, idCol, textCol, indexPath, Some(b.tag))) {
+      (spark, deltaDir) => spark.read.parquet(s"$deltaDir/pairs")
+    }
 
   /** Streaming growth of the persisted sketch PROFILE
     * ([[graft.functions.SketchProfile]]): each document micro-batch
     * appends its per-source sketch partial (KBs), and the CURRENT
-    * folded estimates land at `outPath` under the `batch_id=N`
-    * dynamic-partition overwrite sink — a continuously-updated corpus
-    * monitor that never re-reads old data.
+    * folded estimates land at `outPath` through the [[ingest]] sink —
+    * a continuously-updated corpus monitor that never re-reads old
+    * data.
     *
     * Sketch merges are NOT idempotent, so replay safety rides the
     * batch tag (query-id + batch-id): a redelivered batch's append is
@@ -1258,35 +1074,20 @@ object Streams {
   def profileIngest(stream: DataFrame, indexPath: String, outPath: String,
                     checkpoint: String, idCol: String = "doc_id",
                     textCol: String = "text",
-                    srcCol: String = "source"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          graft.functions.SketchProfile.appendBatch(
-            batch, idCol, textCol, srcCol, indexPath, Some(tag))
-          val vdir = graft.operators.Versioned.resolve(spark, indexPath).get
-          graft.functions.SketchProfile.readEstimates(spark, vdir)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                    srcCol: String = "source"): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      SketchProfile.appendBatch(b.df, idCol, textCol, srcCol, indexPath, Some(b.tag))
+      val vdir = Versioned.committed(b.spark, indexPath,
+        "sketch profile (SketchProfile.writeIndex)")
+      b.emit(SketchProfile.readEstimates(b.spark, vdir), outPath)
+    }
 
   /** Streaming growth of the persisted HEALTH profile
     * ([[graft.functions.HealthProfile]]): each document micro-batch
     * appends its (source × distinct-lengths)-bounded count partial,
-    * and the CURRENT exact KS drift report lands at `outPath` under
-    * the `batch_id=N` dynamic-partition overwrite sink — continuous
-    * distribution-drift monitoring that never re-reads old data.
+    * and the CURRENT exact KS drift report lands at `outPath` through
+    * the [[ingest]] sink — continuous distribution-drift monitoring
+    * that never re-reads old data.
     *
     * Count merges are NOT idempotent, so replay safety rides the
     * batch tag (query-id + batch-id), exactly the [[profileIngest]]
@@ -1295,28 +1096,13 @@ object Streams {
     */
   def healthIngest(stream: DataFrame, indexPath: String, outPath: String,
                    checkpoint: String, srcCol: String = "source",
-                   lenCol: String = "n_chars"): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tag = batchTag(spark, checkpoint, batchId)
-          graft.functions.HealthProfile.appendBatch(
-            batch, srcCol, lenCol, indexPath, Some(tag))
-          val vdir = graft.operators.Versioned.resolve(spark, indexPath).get
-          graft.functions.HealthProfile.readKs(spark, vdir)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-    q.processAllAvailable()
-    q
-  }
+                   lenCol: String = "n_chars"): StreamingQuery =
+    ingest(stream, checkpoint) { b =>
+      HealthProfile.appendBatch(b.df, srcCol, lenCol, indexPath, Some(b.tag))
+      val vdir = Versioned.committed(b.spark, indexPath,
+        "health profile (HealthProfile.writeIndex)")
+      b.emit(HealthProfile.readKs(b.spark, vdir), outPath)
+    }
 
   /** Durable sink: append the stream to a parquet directory with a
     * checkpoint (exactly-once file sink). The production counterpart

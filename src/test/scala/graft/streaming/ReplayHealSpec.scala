@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.functions.Dedup
+import graft.functions.{Dedup, GraphIndex, LinkageIndex, SimJoinIndex}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the crash window the tagged-delta mechanism exists for: a
@@ -137,6 +139,63 @@ class ReplayHealSpec extends AnyFunSuite {
       val vd = graft.operators.Versioned.resolve(spark, s"$dir/$ix").get
       assert(graft.operators.Versioned.listDeltas(spark, vd).size <= 1,
         s"$ix index grew on replay")
+    }
+  }
+
+  test("graph/linkage/simjoin ingest: a lost sink partition heals from the batch's own delta") {
+    // the crash window between a face's delta commit and its sink
+    // write: on replay the append commits nothing (its ids are already
+    // indexed), so the face must re-locate the delta carrying the
+    // batch's tag and re-emit the partition from it
+    val sf = "/root/testdata/sf0.001"
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
+    val customers = graft.Tables.customer(spark, sf)
+      .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
+    val blocks = Seq("c_nationkey", "c_mktsegment")
+    // (face, base rows → index, batch rows, run the face over a stream)
+    val faces: Seq[(String, String => Unit, DataFrame,
+        (DataFrame, String, String, String) => StreamingQuery)] = Seq(
+      ("graphIngest",
+        ix => { GraphIndex.writeIndex(docs.filter(col("doc_id") < 200),
+          "doc_id", "text", ix); () },
+        docs.filter(col("doc_id") >= 200),
+        (s, ix, out, ck) => Streams.graphIngest(s, ix, out, ck)),
+      ("linkageIngest",
+        ix => { LinkageIndex.writeIndex(customers.filter(col("c_custkey") % 3 === 0),
+          "c_custkey", "c_name", blocks, ix); () },
+        customers.filter(col("c_custkey") % 3 =!= 0),
+        (s, ix, out, ck) => Streams.linkageIngest(s, ix, out, ck,
+          idCol = "c_custkey", nameCol = "c_name", blockCols = blocks)),
+      ("simjoinIngest",
+        ix => { SimJoinIndex.writeIndex(docs.filter(col("doc_id") % 3 === 0),
+          "doc_id", "text", ix); () },
+        docs.filter(col("doc_id") % 3 =!= 0),
+        (s, ix, out, ck) => Streams.simjoinIngest(s, ix, out, ck)))
+    faces.foreach { case (face, build, batch, run) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_heal_$face").toString
+      val (ix, out, ckpt) = (s"$dir/index", s"$dir/out", s"$dir/ckpt")
+      build(ix)
+      batch.coalesce(1).write.parquet(s"$dir/in")
+      def stream() = spark.readStream.schema(batch.schema).parquet(s"$dir/in")
+      def rows() = spark.read.parquet(s"$out/batch_id=0").collect().toSet
+      def deltas() = graft.operators.Versioned.listDeltas(spark,
+        graft.operators.Versioned.resolve(spark, ix).get)
+      run(stream(), ix, out, ckpt).stop()
+      val before = rows()
+      assert(before.nonEmpty, s"$face: degenerate setup, batch 0 emitted nothing")
+      val committed = deltas()
+      assert(committed.size == 1, s"$face: expected one delta, got $committed")
+      // lose the sink partition and the checkpoint commit: the delta
+      // is committed, the output is not
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete(); ()
+      }
+      rm(new java.io.File(s"$out/batch_id=0"))
+      dropNewestCommit(ckpt)
+      run(stream(), ix, out, ckpt).stop()
+      assert(rows() == before, s"$face: the healed partition differs from the original")
+      assert(deltas() == committed, s"$face: the replay committed a second delta")
     }
   }
 }

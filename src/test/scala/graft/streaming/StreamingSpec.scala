@@ -420,6 +420,33 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("dedupIngest: an index that exists but cannot be read fails the batch") {
+    // only a MISSING index reads as empty: read as empty, the clobbered
+    // index below would let the cross-batch duplicate through again
+    val base = java.nio.file.Files.createTempDirectory("graft_ingest_bad")
+    val (idx, out, ckpt) = (s"$base/idx", s"$base/out", s"$base/ckpt")
+    val ch = Streams.Channel[IngestDoc](spark)
+    val q = Streams.dedupIngest(ch.toDS.toDF(),
+      md5(col("text").cast("binary")), "id", idx, out, ckpt)
+    try {
+      ch.send(IngestDoc(1, "aa"), IngestDoc(2, "bb"))
+      q.processAllAvailable()
+      assert(spark.read.parquet(idx).count() == 2)
+      def clobber(f: java.io.File): Unit =
+        if (f.isDirectory) f.listFiles().foreach(clobber)
+        else if (f.getName.endsWith(".parquet")) {
+          val w = new java.io.FileOutputStream(f)
+          try w.write("not a parquet file".getBytes) finally w.close()
+        }
+      clobber(new java.io.File(idx))
+      ch.send(IngestDoc(3, "aa"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(spark.read.parquet(out).count() == 2, "the duplicate reached outPath")
+    } finally q.stop()
+  }
+
   test("parquet sink: exactly-once append with checkpoint, resumable") {
     import Streams.SEvent
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
