@@ -242,6 +242,10 @@ object Pipeline {
     * rows, not a `LocalRelation` holding them, because every analyzer
     * and optimizer rule re-walks a `LocalRelation`'s rows (a loop of
     * 200k-element pipelines spent over half its CPU samples there).
+    * Each partition's rows ship as one packed byte array, read in
+    * place on the executor: shipped as row objects, every task of
+    * every action Java-serialized them one by one (a fifth of that
+    * loop's CPU samples).
     */
   def fromSeq[T: Encoder](spark: SparkSession, seq: Seq[T],
                           config: PipelineConfig = PipelineConfig()): Pipeline[T] =
@@ -249,7 +253,8 @@ object Pipeline {
 
   /** Reference pipeline.FromMap (pipeline/pipeline.go:114): the map
     * becomes a distributed dataset of (key, value) tuples, built as
-    * [[fromSeq]] builds its source (driver-encoded, out of the plan).
+    * [[fromSeq]] builds its source (driver-encoded, out of the plan,
+    * one packed byte array per partition).
     */
   def fromMap[K, V](spark: SparkSession, m: Map[K, V],
                     config: PipelineConfig = PipelineConfig())(

@@ -2,11 +2,13 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{classic, Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.encoderFor
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
+
+import scala.collection.immutable.ArraySeq
 
 /** Column ↔ Expression bridging for custom Catalyst expressions.
   *
@@ -85,18 +87,26 @@ object Bridge {
     * encodes them — eagerly on the driver, with the same serializer,
     * so encoding errors surface at this call and elements need not be
     * Java-serializable — and sliced as `LocalTableScanExec` slices
-    * them (min(n, leaf-node parallelism) partitions). The leaf reports
-    * the size estimate the `LocalRelation` would have, so broadcast
-    * planning is unchanged.
+    * them (min(n, leaf-node parallelism) partitions). Each slice
+    * ships as ONE packed byte array ([[PackedRows]]), which the
+    * executor walks in place: a partition of row objects would be
+    * Java-serialized row by row into every task of every action (by
+    * the driver's scheduler endpoint, one launch at a time) and
+    * rebuilt row by row on the executor. The leaf reports the size
+    * estimate the `LocalRelation` would have, so broadcast planning
+    * is unchanged.
     */
   def localDataset[T](spark: SparkSession, data: Seq[T], enc: Encoder[T]): Dataset[T] = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val toRow = encoderFor(enc).createSerializer()
     val output = DataTypeUtils.toAttributes(enc.schema)
-    val rows = data.iterator.map(d => toRow(d).copy()).toVector
-    val rdd = session.sparkContext.parallelize(rows,
-      math.min(math.max(rows.length, 1), session.leafNodeDefaultParallelism))
-    val stats = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * rows.length)
+    val n = data.length
+    val slices = math.min(math.max(n, 1), session.leafNodeDefaultParallelism)
+    val packed = PackedRows.pack(data.iterator.map(d => toRow(d).asInstanceOf[UnsafeRow]), n, slices)
+    val numFields = output.length
+    val rdd = session.sparkContext.parallelize(ArraySeq.unsafeWrapArray(packed), slices)
+      .mapPartitions(_.flatMap(PackedRows.unpack(_, numFields)))
+    val stats = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * n)
     classic.Dataset[T](session, LogicalRDD(output, rdd)(session, Some(stats)))(enc)
   }
 }

@@ -229,6 +229,59 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(build.collect { case f: FileSourceScanExec => f }.isEmpty, plan.toString)
   }
+
+  test("fromSeq ships each partition as one packed buffer: at most 25 serialized bytes per Long row") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val n = 200000
+    val ds = Pipeline.fromSeq(spark, 1L to n.toLong).initStage.ds
+    val leaf = ds.queryExecution.optimizedPlan.collectLeaves().collect { case l: LogicalRDD => l.rdd }
+    val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+    val bytes = leaf.head.partitions.map(p => ser.serialize(p).limit().toLong).sum
+    // a one-Long UnsafeRow is 16 bytes (null bitset word + value), its length prefix 4
+    assert(bytes <= 1.25 * (4 + 16) * n, s"$bytes serialized bytes for $n rows")
+  }
+
+  test("fromSeq sizes: empty, one, fewer than the parallelism, a count the slices do not divide") {
+    val empty = Pipeline.fromSeq(spark, Seq.empty[Long]).initStage
+    assert(empty.ds.queryExecution.toRdd.getNumPartitions == 1)
+    assert(Aggregate.sum(empty) == Success(0L))
+    assert(Aggregate.asSlice(empty).get.isEmpty)
+    val sc = spark.sparkContext
+    for (n <- Seq(1, 3, 200001)) {
+      val in = (1L to n.toLong).toVector
+      val s = Pipeline.fromSeq(spark, in).initStage
+      val slices = math.min(n, sc.defaultParallelism)
+      assert(s.ds.rdd.glom().collect().map(_.toSeq).toSeq ==
+        sc.parallelize(in, slices).glom().collect().map(_.toSeq).toSeq, s"n=$n")
+      assert(Aggregate.sum(s) == Success(n.toLong * (n + 1) / 2), s"n=$n")
+      assert(Aggregate.asSlice(s).get == in, s"n=$n")
+    }
+  }
+
+  test("fromSeq and fromMap round-trip variable-width rows in input order") {
+    def roundTrip[T: org.apache.spark.sql.Encoder](in: Seq[T]): Unit =
+      assert(Aggregate.asSlice(Pipeline.fromSeq(spark, in).initStage).get == in)
+    roundTrip((0 until 300).map(i => if (i % 7 == 0) null else "é漢🙂" * (i % 5) + i))
+    roundTrip((0 until 300).map(i => Seq.tabulate(i % 6)(j => Seq.fill(j)(s"$i.$j"))))
+    roundTrip((0 until 300).map(i => if (i % 3 == 0) None else Some("ß" * i)))
+    roundTrip((0 until 300).map(i => SeqRec(i, if (i % 4 == 0) null else "ü" * i, Seq.fill(i % 9)(i))))
+    val m = (0 until 500).map(i => s"k$i" -> ("ø" * (i % 13) + i)).toMap
+    assert(Aggregate.asSlice(Pipeline.fromMap(spark, m).initStage).get == m.toSeq)
+  }
+
+  test("two actions on one fromSeq stage agree") {
+    val s = Pipeline.fromSeq(spark, (1 to 5000).map(i => "x" * (i % 11))).initStage.map(_.length.toLong)
+    val ref = (1 to 5000).map(i => (i % 11).toLong)
+    assert(Aggregate.sum(s) == Success(ref.sum))
+    assert(Aggregate.sum(s) == Success(ref.sum))
+    assert(Aggregate.asSlice(s).get == ref)
+  }
+
+  test("four concurrent async sums over one fromSeq stage all return the reference value") {
+    val s = Pipeline.fromSeq(spark, 1L to 100000L).initStage
+    val futures = Seq.fill(4)(AsyncAggregate.sum(s))
+    assert(futures.map(_.get()) == Seq.fill(4)(Success(100000L * 100001 / 2)))
+  }
 }
 
 /** Not Serializable: shippable only as the bytes its kryo encoder
