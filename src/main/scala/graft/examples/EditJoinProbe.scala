@@ -2,12 +2,13 @@ package graft.examples
 
 import org.apache.spark.sql.functions._
 
-/** Measurement probe for the q_linkage candidate pipeline: times each
-  * prefix of deletionKeys → groupBy(collect_list) → pair explode →
-  * verify separately (noop sink, warm + min-of-rest), so the stage-58
-  * CPU can be attributed to the variant kernel vs the partial/final
-  * collect_list aggregates vs the pair machinery. Pure measurement —
-  * not a declared query.
+/** Measurement probe for the q_linkage candidate pipeline: times the
+  * deletion keys alone, the keys grouped into collect_list buckets,
+  * the candidate pairs (the SortedRunPairs operator) and the full
+  * self-join separately (noop sink, warm + min-of-rest), so the CPU
+  * can be attributed to the variant kernel vs the bucket grouping vs
+  * the pair machinery vs the verify. Pure measurement — not a
+  * declared query.
   * Args: sfDir [iters]
   */
 object EditJoinProbe {
@@ -38,7 +39,6 @@ object EditJoinProbe {
         .agg(collect_list(col("id")).as("ms"))
         .filter(size(col("ms")) >= 2)
     }
-    time("pairs_legacy")(graft.functions.Dedup.pairsFromBucketsIds(keyed, 10000, "probe_drops"))
     time("pairs_operator")(graft.operators.EditDistanceJoin.candidatePairs(keyed, 10000))
     time("full_selfjoin")(graft.operators.EditDistanceJoin.selfJoin(
       c, "c_custkey", "c_name", Seq("c_nationkey", "c_mktsegment"), 2))

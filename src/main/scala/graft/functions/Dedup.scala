@@ -14,10 +14,15 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType
   *    before leaving the mapper.
   *  - Only fixed-width keys (md5 hex, band hashes, 60-bit simhashes)
   *    ever shuffle — bytes grow with row count, not corpus bytes.
-  *  - Candidate pairs are generated inside capped LSH buckets
-  *    (collect_list + in-bucket cross), avoiding a second self-join
-  *    shuffle entirely; `maxBucket` guards degenerate buckets and
-  *    singleton buckets are dropped before any pair work.
+  *  - Candidate pairs are generated inside capped LSH buckets,
+  *    avoiding a second self-join shuffle entirely: id-only buckets
+  *    go through [[graft.plans.SortedRunPairs]] (one sort + a run
+  *    walk), buckets carrying a payload through collect_list + an
+  *    in-bucket kernel. `maxBucket` guards degenerate buckets (the
+  *    drops are counted, never silent) and singleton buckets are
+  *    dropped before any pair work.
+  *  - Pair ids are long: every pair entry point checks its id column
+  *    up front ([[requireLongIds]]).
   */
 object Dedup {
 
@@ -474,17 +479,19 @@ object Dedup {
   }
 
   /** LSH candidate pairs: band the signature (bands × rowsPerBand =
-    * numHashes), hash each band, shuffle only (band, bandHash, id,
-    * sig), and generate pairs inside each bucket. Buckets of size 1
-    * are skipped; buckets larger than `maxBucket` (boilerplate
-    * shingles) are dropped — the standard skew guard.
+    * numHashes), hash each band, shuffle only (id, band, bandHash),
+    * and generate pairs inside each bucket. Buckets of size 1 are
+    * skipped; buckets larger than `maxBucket` (boilerplate shingles)
+    * are dropped — the standard skew guard, counted in
+    * [[graft.plans.SortedRunPairs]]' SQL metrics.
     *
     * Returns (id_a, id_b, est_jaccard) with est_jaccard = fraction of
-    * matching signature components.
+    * matching signature components. `idCol` must be long.
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int = 3, numHashes: Int = 64,
                         bands: Int = 16, maxBucket: Int = 1000): DataFrame = {
+    requireLongIds("Dedup.minhashCandidates", df, idCol)
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
     // the signature table is read three times (banding + both sides of
@@ -502,20 +509,18 @@ object Dedup {
     // a lazily-persisted table computes once per in-flight stage (see
     // sharedShingleEdges)
     sigs.count()
-    estPairsForBanding(sigs, bands, rowsPerBand, numHashes, maxBucket,
-      "lsh_drops_minhash")
+    estPairsForBanding(sigs, bands, rowsPerBand, numHashes, maxBucket)
   }
 
   /** Band the (cached) signature table into `bands` buckets, pair
     * within buckets, and join signatures back for est_jaccard — the
-    * banding-parameterized core of [[minhashCandidates]], shared with
-    * [[lshBandSweep]] so the sweep evaluates the EXACT production
-    * candidate path per config, not a reimplementation.
+    * banding-parameterized core of [[minhashCandidates]].
+    * [[lshBandSweep]] produces the same pair set per config with its
+    * own config-keyed machinery (CalibrationQueriesSpec pins it).
     */
   private def estPairsForBanding(sigs: DataFrame, bands: Int,
                                  rowsPerBand: Int, numHashes: Int,
-                                 maxBucket: Int,
-                                 observeName: String): DataFrame = {
+                                 maxBucket: Int): DataFrame = {
     // unrolled at plan-build time: band b hashes signature rows [b*R, (b+1)*R)
     val bandHashes = (0 until bands).map { b =>
       xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand), lit(b))
@@ -528,8 +533,11 @@ object Dedup {
     // signatures join back once per distinct pair
     // payload joins merge-hinted (the ngramJaccard precedent): both
     // sides are corpus-derived explode descendants, and a tiny-SF
-    // size estimate must not broadcast either build
-    pairsFromBucketsIds(banded, maxBucket, observeName)
+    // size estimate must not broadcast either build. No repartition
+    // ahead of the pair operator: its required distribution places
+    // the one (band, bkey) exchange.
+    graft.plans.SortedRunPairs.pairs(banded, maxBucket)
+      .dropDuplicates("id_a", "id_b")
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
         .hint("merge"), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
@@ -552,16 +560,20 @@ object Dedup {
     *
     * The corpus is signed ONCE (one text scan, the shared cached
     * signature table); each config pays only its banding + in-bucket
-    * pairing, and each runs the exact [[minhashCandidates]] path.
-    * Output: one row per config — (n_bands, rows_per_band,
-    * n_candidates, n_ge_03, n_ge_05), all counts, engine-exact (est
-    * thresholds compare dyadic k/64 values, so ≥0.3 ⟺ k ≥ 20 in any
-    * engine).
+    * pairing. The sweep keeps its own config-keyed collect_list +
+    * LongPairs machinery (the `cfg` column rides each bucket), and per
+    * config its bucket contents, cap rule and pair set are those of
+    * [[minhashCandidates]] (CalibrationQueriesSpec pins the equality).
+    * `idCol` must be long. Output: one row per config — (n_bands,
+    * rows_per_band, n_candidates, n_ge_03, n_ge_05), all counts,
+    * engine-exact (est thresholds compare dyadic k/64 values, so
+    * ≥0.3 ⟺ k ≥ 20 in any engine).
     */
   def lshBandSweep(df: DataFrame, idCol: String, textCol: String,
                    bandConfigs: Seq[Int] = Seq(8, 16, 32),
                    shingleK: Int = 3, numHashes: Int = 64,
                    maxBucket: Int = 1000): DataFrame = {
+    requireLongIds("Dedup.lshBandSweep", df, idCol)
     require(bandConfigs.nonEmpty && bandConfigs.forall(b =>
       b > 0 && numHashes % b == 0),
       s"each band count must divide numHashes=$numHashes")
@@ -582,8 +594,8 @@ object Dedup {
     // cfg constant within a config degenerates to the old (band, bkey)
     // grouping, dropDuplicates carries cfg, and the band hash still
     // seeds from the within-config band index. Each config therefore
-    // still evaluates the exact [[minhashCandidates]] bucket/pair/est
-    // semantics — shared machinery, shared scheduling.
+    // still evaluates [[minhashCandidates]]' bucket/pair/est
+    // semantics, with one scheduling chain for all configs.
     val entries = bandConfigs.flatMap { bands =>
       val rowsPerBand = numHashes / bands
       (0 until bands).map { b =>
@@ -595,10 +607,10 @@ object Dedup {
     val banded = sigs.select(col("id"), explode(array(entries: _*)).as("e"))
       .select(col("id"), col("e.cfg").as("cfg"), col("e.band").as("band"),
         col("e.bkey").as("bkey"))
-    // the pairsFromBucketsIds shape with cfg carried through the
-    // grouping, the cap observation, and the pair dedup (per-config
-    // observes were never asserted; the combined metric keeps the
-    // mis-sized-banding signal)
+    // collect_list buckets with cfg carried through the grouping, the
+    // cap observation, and the pair dedup (per-config observes were
+    // never asserted; the combined metric keeps the mis-sized-banding
+    // signal)
     val buckets = banded
       .groupBy("cfg", "band", "bkey")
       .agg(collect_list(col("id")).as("ms"))
@@ -609,16 +621,13 @@ object Dedup {
           .otherwise(0L)).as("dropped_ids"),
         count(lit(1)).as("candidate_buckets"))
       .filter(size(col("ms")) <= maxBucket)
-    val pairCol =
-      if (banded.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        graft.plans.ArrayPairsCols.longPairs(col("ms"))
-      else
-        flatten(transform(col("ms"), a =>
-          transform(filter(col("ms"), b => b > a),
-            b => struct(a.as("id_a"), b.as("id_b")))))
+    // round-robin spread before the quadratic explode: the bucket rows
+    // are bytes-small, so AQE would coalesce the aggregate's exchange
+    // onto few tasks and the explode would amplify inside them
     val pairs = buckets
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("cfg"), explode(pairCol).as("pair"))
+      .select(col("cfg"),
+        explode(graft.plans.ArrayPairsCols.longPairs(col("ms"))).as("pair"))
       .select(col("cfg"), col("pair.id_a").as("id_a"), col("pair.id_b").as("id_b"))
       .dropDuplicates("cfg", "id_a", "id_b")
     val est = pairs
@@ -648,74 +657,15 @@ object Dedup {
         coalesce(col("n_ge_05"), lit(0L)).as("n_ge_05"))
   }
 
-  /** Bucket pair generation: group (band,bkey) rows into buckets,
-    * drop singletons, cap degenerate buckets, emit each unordered id
-    * pair once. Buckets carry ONLY ids, so in-bucket pair generation
-    * builds tiny structs; callers join payloads back by id afterwards
-    * (codegen'd join vs interpreted array copies inside the HOF —
-    * much cheaper when payloads are wide, and a pair found in several
-    * bands is materialized once, not once per band).
-    *
-    * The `maxBucket` cap is the standard quadratic-blowup guard, but a
-    * silent cap hides recall loss — a mis-sized `planes`/`bands`
-    * parameterization would just quietly miss duplicates. So the drop
-    * is OBSERVED: metrics named `observeName` ride the same job
-    * (`Dataset.observe` — accumulator-backed, no second scan) and
-    * surface `dropped_buckets` / `dropped_ids` / `candidate_buckets`
-    * (all multi-member buckets, dropped included) in
-    * `df.queryExecution.observedMetrics` (batch) or per micro-batch
-    * progress (streams). Nonzero `dropped_ids` is the signal to
-    * re-size the banding, cf. the planes-sizing formula on
-    * [[graft.functions.Similarity.embeddingNearDupsAxis]].
-    *
-    * Known Spark quirk (pinned in DedupSpec): if EVERY bucket is
-    * dropped, AQE's empty-relation propagation replaces the downstream
-    * subtree with `EmptyRelation` in the final adaptive plan, and
-    * `observedMetrics` — which walks that final plan — comes back
-    * empty even though the stage ran and paid for the metric. The
-    * degenerate all-dropped case is thus only observable with AQE off
-    * (or from the candidate count being 0, which IS loud); the
-    * partial-drop case every mis-sized production run hits reports
-    * fine under AQE.
+  /** The id check of every long-id pair entry point: `idCol` of `df`
+    * must be BIGINT. It reads the analyzed schema only (no job), so a
+    * caller with another id type gets this error up front instead of
+    * a codegen type mismatch or a driver ClassCastException mid-run.
     */
-  private[graft] def pairsFromBucketsIds(banded: DataFrame, maxBucket: Int,
-                                         observeName: String): DataFrame = {
-    val buckets = banded
-      .groupBy("band", "bkey")
-      .agg(collect_list(col("id")).as("ms"))
-      .filter(size(col("ms")) >= 2)
-      .observe(observeName,
-        sum(when(size(col("ms")) > maxBucket, 1L).otherwise(0L)).as("dropped_buckets"),
-        sum(when(size(col("ms")) > maxBucket, size(col("ms")).cast("long"))
-          .otherwise(0L)).as("dropped_ids"),
-        count(lit(1)).as("candidate_buckets"))
-      .filter(size(col("ms")) <= maxBucket)
-    // round-robin repartition before the pair explode: the bucket
-    // rows are BYTES-small, so AQE coalesces the groupBy exchange to
-    // one partition — and then the quadratic in-bucket explode
-    // amplifies inside a single task (profiled: 1.8 s/1 task for
-    // 1.56 M pairs at sf1). Round-robin with an explicit count is
-    // exempt from AQE coalescing AND can't be elided as redundant by
-    // EnsureRequirements (hashing on (band, bkey) again would be,
-    // since the groupBy exchange already provides that exact
-    // distribution); the extra exchange carries only the id arrays.
-    // round-18: the quadratic in-bucket explode runs in the codegen
-    // kernel [[graft.plans.ArrayPairs.longPairs]] when ids are longs
-    // (the interpreted nested transform/filter walked the lambda per
-    // element — 8.5 s CPU for 1.23 M pairs at sf0.1); non-long id
-    // types keep the HOF form. ArrayPairsSpec pins pair-set equality.
-    val pairCol =
-      if (banded.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        graft.plans.ArrayPairsCols.longPairs(col("ms"))
-      else
-        flatten(transform(col("ms"), a =>
-          transform(filter(col("ms"), b => b > a),
-            b => struct(a.as("id_a"), b.as("id_b")))))
-    buckets
-      .repartition(banded.sparkSession.sparkContext.defaultParallelism)
-      .select(explode(pairCol).as("pair"))
-      .select(col("pair.id_a").as("id_a"), col("pair.id_b").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+  private[graft] def requireLongIds(fn: String, df: DataFrame, idCol: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t == LongType,
+      s"$fn: id column '$idCol' must be bigint, got ${t.simpleString}")
   }
 
   /** Boilerplate detection: the most frequent k-token shingles across
@@ -743,18 +693,20 @@ object Dedup {
     * and shingles in more than `maxDf` docs (boilerplate) are dropped
     * BEFORE pair generation, bounding the per-shingle join fan-out to
     * maxDf² — the same degenerate-bucket guard as LSH banding, but
-    * exact. One shuffle on the 64-bit shingle hash; the df band is a
-    * map-side-combinable groupBy + merge semi-join ([[joinKeyStats]] —
-    * NOT a window: a boilerplate shingle's window group would buffer
-    * in one task), and pair generation reuses the h partitioning
-    * (bounded per-shingle groups + the LongPairs kernel — round 19).
-    * Feed the result (with [[graft.operators.ConnectedComponents]])
-    * to turn near-dup pairs into canonical clusters; at extreme scale
-    * swap in [[minhashCandidates]] edges — same downstream shape.
+    * exact. One shuffle on the 64-bit shingle hash; the df band and
+    * the holder lists come from one map-side-combinable groupBy(h)
+    * with a bounded collect (NOT a window: a boilerplate shingle's
+    * window group would buffer in one task), and pair generation runs
+    * the LongPairs kernel over those bounded per-shingle groups.
+    * `idCol` must be long. Feed the result (with
+    * [[graft.operators.ConnectedComponents]]) to turn near-dup pairs
+    * into canonical clusters; at extreme scale swap in
+    * [[minhashCandidates]] edges — same downstream shape.
     */
   def sharedShingleEdges(df: DataFrame, idCol: String, textCol: String,
                          shingleK: Int = 3, minShared: Int = 5,
                          minDf: Int = 2, maxDf: Int = 20): DataFrame = {
+    requireLongIds("Dedup.sharedShingleEdges", df, idCol)
     val sh = shingleHashes(df, idCol, textCol, shingleK).dropDuplicates("id", "h")
     // Round 19 wave 5: the df band and the per-h holder lists come
     // from ONE groupBy(h) over ONE evaluation of the shingle table —
@@ -775,37 +727,15 @@ object Dedup {
     // pass disappears too. Pair semantics unchanged from the wave-1
     // rewrite: ids distinct per h, all (a, b) with b > a ≡ the old
     // self-join's id_a < id_b rows, exact integer shared counts, same
-    // oracle. Non-long ids keep the legacy two-pass + HOF-pairs form
-    // (the pairsFromBucketsIds convention).
-    val par = sh.sparkSession.sparkContext.defaultParallelism
-    val buckets =
-      if (sh.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        sh.groupBy("h").agg(count(lit(1)).as("_df"),
-            graft.plans.BoundedCollect.boundedCollectLong(col("id"), math.max(maxDf, 1)).as("ms"))
-          .filter(col("_df").between(minDf, maxDf))
-          .select(col("h"), col("ms"))
-      else {
-        val shP = graft.plans.CacheHandles.track("dedup.edges.shingles",
-          sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
-        shP.count() // eager: rows + stats sides are concurrent AQE stages
-        joinKeyStats(shP, "h", Seq(count(lit(1)).as("_df")),
-            col("_df").between(minDf, maxDf), "left_semi")
-          .groupBy("h").agg(collect_list(col("id")).as("ms"))
-      }
-    val pairCol =
-      if (sh.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        graft.plans.ArrayPairsCols.longPairs(col("ms"))
-      else
-        flatten(transform(col("ms"), a =>
-          transform(filter(col("ms"), b => b > a),
-            b => struct(a.as("id_a"), b.as("id_b")))))
-    buckets
-      // round-robin spread before the quadratic explode (the
-      // pairsFromBucketsIds rationale: bucket rows are bytes-small, so
-      // AQE would coalesce the tiny aggregate output onto few tasks
-      // and the explode amplifies inside them)
-      .repartition(par)
-      .select(explode(pairCol).as("pair"))
+    // oracle.
+    sh.groupBy("h").agg(count(lit(1)).as("_df"),
+        graft.plans.BoundedCollect.boundedCollectLong(col("id"), math.max(maxDf, 1)).as("ms"))
+      .filter(col("_df").between(minDf, maxDf))
+      // round-robin spread before the quadratic explode: bucket rows
+      // are bytes-small, so AQE would coalesce the tiny aggregate
+      // output onto few tasks and the explode amplifies inside them
+      .repartition(sh.sparkSession.sparkContext.defaultParallelism)
+      .select(explode(graft.plans.ArrayPairsCols.longPairs(col("ms"))).as("pair"))
       .select(col("pair.id_a").as("id_a"), col("pair.id_b").as("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
@@ -919,10 +849,19 @@ object Dedup {
     * band matches exactly — then exact popcount verify on the pair.
     * Band widths adapt to the band count ([[SimhashBits]] bits split
     * as evenly as possible); more bands = more candidate volume, so
-    * keep maxHamming small (≤ 7 is sensible).
+    * keep maxHamming small (≤ 7 is sensible). `idCol` must be long.
+    *
+    * Buckets above `maxBucket` are dropped, and the drop is observed
+    * as `lsh_drops_simhash` (`dropped_buckets`, `dropped_ids`,
+    * `candidate_buckets` — multi-member buckets, dropped included) in
+    * `queryExecution.observedMetrics`, the
+    * [[Similarity.embeddingNearDupsAxis]] convention. Under AQE a run
+    * whose every bucket is dropped loses the metric (see
+    * [[graft.plans.SortedRunPairs]]).
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
+    requireLongIds("Dedup.simhashPairs", df, idCol)
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 32)")
     val nBands = maxHamming + 1
     val base = SimhashBits / nBands
@@ -945,25 +884,21 @@ object Dedup {
     val buckets = banded
       .groupBy("band", "bkey")
       .agg(collect_list(struct(col("id"), col("sh"))).as("ms"))
-      .filter(size(col("ms")).between(2, maxBucket))
-    // round-robin repartition pre-explode: see pairsFromBucketsIds —
-    // AQE coalesces the bytes-small bucket exchange into one task and
-    // the quadratic explode amplifies inside it
-    // round-18: codegen in-bucket hamming pair kernel when ids are
-    // longs (see pairsFromBucketsIds); ArrayPairsSpec pins equality
-    val pairCol =
-      if (sh.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        graft.plans.ArrayPairsCols.simhashBucketPairs(col("ms"), maxHamming)
-      else
-        flatten(transform(col("ms"), a =>
-          transform(
-            filter(col("ms"), b => b("id") > a("id") &&
-              bit_count(a("sh").bitwiseXOR(b("sh"))) <= maxHamming),
-            b => struct(a("id").as("id_a"), b("id").as("id_b"),
-              bit_count(a("sh").bitwiseXOR(b("sh"))).as("hamming")))))
+      .filter(size(col("ms")) >= 2)
+      .observe("lsh_drops_simhash",
+        sum(when(size(col("ms")) > maxBucket, 1L).otherwise(0L)).as("dropped_buckets"),
+        sum(when(size(col("ms")) > maxBucket, size(col("ms")).cast("long"))
+          .otherwise(0L)).as("dropped_ids"),
+        count(lit(1)).as("candidate_buckets"))
+      .filter(size(col("ms")) <= maxBucket)
+    // round-robin repartition pre-explode: AQE coalesces the
+    // bytes-small bucket exchange into one task and the quadratic
+    // explode would amplify inside it. The in-bucket hamming pairs run
+    // in the codegen kernel (round 18; ArrayPairsSpec pins equality).
     buckets
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(explode(pairCol).as("p"))
+      .select(explode(graft.plans.ArrayPairsCols.simhashBucketPairs(
+        col("ms"), maxHamming)).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         col("p.hamming").as("hamming"))
       .dropDuplicates("id_a", "id_b")

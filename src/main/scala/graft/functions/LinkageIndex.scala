@@ -27,14 +27,15 @@ import org.apache.spark.sql.functions._
   *
   * Appends are O(batch): the batch's keys probe only the buckets the
   * batch TOUCHES (untouched buckets cannot gain a pair involving a
-  * new doc), candidate generation reuses the exact rebuild machinery
-  * over those buckets' full membership, and only pairs with ≥1 fresh
-  * side survive (old-old pairs in touched buckets already sit in
+  * new doc), candidate generation runs the rebuild's own
+  * [[graft.operators.EditDistanceJoin.candidatePairs]] over those
+  * buckets' full membership, and only pairs with ≥1 fresh side
+  * survive (old-old pairs in touched buckets already sit in
   * `pairs/`). Append ≡ rebuild is spec-pinned; the one caveat is the
   * shared `maxBucket` degenerate-bucket cap — a bucket crossing the
   * cap BETWEEN base build and append drops differently than one
-  * rebuild would, which is exactly why the drop counters are observed
-  * and loud ([[Dedup.pairsFromBucketsIds]]).
+  * rebuild would, which is exactly why the drop counters are loud
+  * (the [[graft.plans.SortedRunPairs]] SQL metrics). Ids are long.
   */
 object LinkageIndex {
 
@@ -80,6 +81,7 @@ object LinkageIndex {
   def writeIndex(docs: DataFrame, idCol: String, nameCol: String,
                  blockCols: Seq[String], indexPath: String,
                  maxDist: Int = 2, maxBucket: Int = 10000): String = {
+    Dedup.requireLongIds("LinkageIndex.writeIndex", docs, idCol)
     require(maxDist >= 0 && maxDist <= 2, "deletion neighborhood enumerates tau <= 2")
     val spark = docs.sparkSession
     graft.operators.Versioned.commitNew(spark, indexPath) { dir =>
@@ -89,10 +91,7 @@ object LinkageIndex {
         .deletionKeys(docsBack, "id", "name", bNames(blockCols.size))
         .write.parquet(s"$dir/keys")
       val keysBack = spark.read.parquet(s"$dir/keys")
-      // the streaming run-pairs operator (see EditDistanceJoin.
-      // candidatePairs) — the index build walks the same corpus-scale
-      // singleton-heavy key table as the per-run self-join; the
-      // batch-sized append probe below keeps the aggregate form
+      // the self-join's candidate machinery, shared with appendIndex
       val cand = graft.operators.EditDistanceJoin.candidatePairs(
         keysBack, maxBucket)
       graft.operators.EditDistanceJoin
@@ -134,6 +133,7 @@ object LinkageIndex {
   def appendIndex(newDocs: DataFrame, idCol: String, nameCol: String,
                   blockCols: Seq[String], indexPath: String,
                   tag: Option[String] = None): Option[String] = {
+    Dedup.requireLongIds("LinkageIndex.appendIndex", newDocs, idCol)
     val spark = newDocs.sparkSession
     val vdir = graft.operators.Versioned.committed(spark, indexPath,
       "linkage index (LinkageIndex.writeIndex)")
@@ -173,8 +173,8 @@ object LinkageIndex {
           val members = component(spark, vdir, "keys")
             .join(touched, Seq("band", "bkey"), "left_semi")
             .unionByName(freshKeys)
-          val cand = Dedup.pairsFromBucketsIds(members, meta.maxBucket,
-            "linkage_append_drops")
+          val cand = graft.operators.EditDistanceJoin.candidatePairs(
+            members, meta.maxBucket)
           // only pairs with a fresh side are NEW (old-old pairs in
           // touched buckets already sit in pairs/)
           val fids = fresh.select("id")

@@ -242,12 +242,14 @@ object Pq {
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     import spark.implicits._
-    val dir = Ivf.indexDir(spark, path)
-    val centroids = Ivf.readCentroidsFrom(spark, dir)
-    val codebooks = readCodebooksFrom(spark, dir)
-    val codes = readCodesFrom(spark, dir)
-    val vectors = readVectorsFrom(spark, dir)
     graft.operators.Versioned.commitNew(spark, path) { v =>
+      // resolved and listed INSIDE commitNew's write callback (under
+      // the writer _LOCK, which appendToIndex's commitDelta also
+      // takes): a delta committed between planning the fold and taking
+      // the lock would otherwise be silently dropped (Ivf.compactIndex)
+      val dir = Ivf.indexDir(spark, path)
+      val centroids = Ivf.readCentroidsFrom(spark, dir)
+      val codebooks = readCodebooksFrom(spark, dir)
       codebooks.zipWithIndex.flatMap { case (cb, s) =>
         cb.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
       }.toSeq.toDF("subspace", "cell", "centroid")
@@ -257,8 +259,10 @@ object Pq {
         .toDF("cell", "centroid")
         .repartition(1)
         .write.mode("overwrite").parquet(s"$v/centroids")
-      codes.write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$v/codes")
-      vectors.write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$v/vectors")
+      readCodesFrom(spark, dir)
+        .write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$v/codes")
+      readVectorsFrom(spark, dir)
+        .write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$v/vectors")
     }
   }
 

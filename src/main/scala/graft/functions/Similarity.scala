@@ -47,57 +47,43 @@ object Similarity {
   private[functions] def normalized(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn(vecCol, graft.plans.ArrayUnit.array_unit(col(vecCol)))
 
-  /** Brute-force top-k cosine neighbors for each query vector.
+  /** Brute-force top-k cosine neighbors for each query vector, a
+    * vector never being its own neighbor (query_id ≠ neighbor_id).
     *
-    * `queries` (small) is broadcast; phase 1 keeps only the local
-    * top-k per (query, input-partition); phase 2 merges the partials.
-    * Shuffle volume: k × queries × partitions rows, independent of
-    * corpus size.
+    * The bounded query set is collected once and compiled into the
+    * codegen [[graft.plans.CosineSims]] kernel, which scores one
+    * corpus vector against every query in a tight loop (left-to-right
+    * ArrayDot fold, r4-rounded sims, null sims for zero-norm
+    * vectors). Phase 1 keeps only the local top-k per (query,
+    * input-partition); phase 2 merges the partials. Shuffle volume:
+    * k × queries × partitions rows, independent of corpus size.
+    * `idCol` must be long on both sides.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    // Round 19 (broadcast-top-k-cosine kernel): the former shape was a
-    // BroadcastNestedLoopJoin on query_id ≠ neighbor_id — per PAIR it
-    // paid the join-row machinery (JoinedRow allocation, per-pair
-    // array re-extraction) before the one 64-dim dot product that
-    // actually matters (~21 CPU-s for 437 k pairs at sf0.1, the dense
-    // legs' whole budget). The bounded, already-broadcast query set is
-    // instead compiled into the codegen [[graft.plans.CosineSims]]
-    // kernel, which scores one corpus vector against every query in a
-    // tight loop (same left-to-right ArrayDot fold, same r4, same
-    // null-sim semantics for zero-norm vectors) — the BNLJ disappears
-    // from the plan and only the generated (query_id, sim) structs
-    // flow into the bounded TopKPerKey heaps. Non-long ids keep the
-    // join form.
-    if (corpus.schema(idCol).dataType == LongType &&
-        queries.schema(idCol).dataType == LongType) {
-      val rows = normalized(queries, vecCol)
-        .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-        .collect() // bounded query set — the join form collects it for broadcast anyway
-        .filterNot(_.isNullAt(0)) // a null query id joins no pairs (null ≠ x is null)
-        .sortBy(_.getLong(0))
-      val qs = new graft.plans.ScoreKernels.CosineQuerySet(
-        rows.map(_.getLong(0)),
-        rows.map(r => if (r.isNullAt(1)) null
-          else r.getSeq[Double](1).toArray))
-      val scored = normalized(spread(corpus), vecCol)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-        .select(col("neighbor_id"), explode(graft.plans.ScoreKernelCols
-          .cosineSims(struct(col("neighbor_id"), col("cvec")), qs)).as("qsc"))
-        .select(col("qsc.query_id").as("query_id"), col("neighbor_id"),
-          col("qsc.sim").as("sim"))
-      topKPerKey(scored, "query_id", k)
-    } else {
-      val q = broadcast(normalized(queries, vecCol)
-        .select(col(idCol).as("query_id"), col(vecCol).as("qvec")))
-      val scored = normalized(spread(corpus), vecCol)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-        .join(q, col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          graft.functions.EngineNeutral.r4(dot(col("qvec"), col("cvec"))).as("sim"))
-      topKPerKey(scored, "query_id", k)
-    }
+    Dedup.requireLongIds("Similarity.bruteForceTopK", corpus, idCol)
+    Dedup.requireLongIds("Similarity.bruteForceTopK", queries, idCol)
+    // Round 19: the kernel replaced a BroadcastNestedLoopJoin on
+    // query_id ≠ neighbor_id, which paid the join-row machinery per
+    // PAIR before the one 64-dim dot product that matters (~21 CPU-s
+    // for 437 k pairs at sf0.1). ScoreKernelsSpec pins the results
+    // bit-for-bit against that join form.
+    val rows = normalized(queries, vecCol)
+      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
+      .collect() // bounded query set
+      .filterNot(_.isNullAt(0)) // a null query id pairs with nothing (null ≠ x is null)
+      .sortBy(_.getLong(0))
+    val qs = new graft.plans.ScoreKernels.CosineQuerySet(
+      rows.map(_.getLong(0)),
+      rows.map(r => if (r.isNullAt(1)) null
+        else r.getSeq[Double](1).toArray))
+    val scored = normalized(spread(corpus), vecCol)
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
+      .select(col("neighbor_id"), explode(graft.plans.ScoreKernelCols
+        .cosineSims(struct(col("neighbor_id"), col("cvec")), qs)).as("qsc"))
+      .select(col("qsc.query_id").as("query_id"), col("neighbor_id"),
+        col("qsc.sim").as("sim"))
+    topKPerKey(scored, "query_id", k)
   }
 
   /** Two-phase distributed top-k by (sim DESC, neighbor_id ASC),
@@ -237,10 +223,15 @@ object Similarity {
     * (e.g. n=20k, target ~100 → planes 16). For high thresholds the
     * recall cost of more planes is tiny (bit-agreement probability is
     * 1 − θ/π per plane).
+    *
+    * Pairs come id-only from [[graft.plans.SortedRunPairs]], whose SQL
+    * metrics count the buckets dropped by `maxBucket`. `idCol` must be
+    * long.
     */
   def embeddingNearDups(corpus: DataFrame, minSim: Double, planes: Int = 16,
                         maxBucket: Int = 10000,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    Dedup.requireLongIds("Similarity.embeddingNearDups", corpus, idCol)
     val half = planes / 2
     val vecs = normalized(spread(corpus), vecCol)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
@@ -251,9 +242,11 @@ object Similarity {
           col("sig").bitwiseAND(lit((1L << half) - 1)),
           shiftright(col("sig"), half))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    // id-only pairs inside capped buckets, then codegen'd joins pull
-    // the (wide) vectors back in for the exact-cosine verify
-    Dedup.pairsFromBucketsIds(banded, maxBucket, "lsh_drops_embedding")
+    // id-only pairs inside capped buckets (the operator's required
+    // distribution places the one exchange), then codegen'd joins
+    // pull the (wide) vectors back in for the exact-cosine verify
+    graft.plans.SortedRunPairs.pairs(banded, maxBucket)
+      .dropDuplicates("id_a", "id_b")
       .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
       .select(col("id_a"), col("id_b"),
@@ -335,11 +328,11 @@ object Similarity {
     // (the SimhashBucketPairs precedent) instead of id-only pairs +
     // two merge joins re-attaching the 520 B vectors per candidate
     // pair (31.4 MB pair-attach shuffle, AQE-coalesced 2-task join
-    // stages at sf0.1). The bucket pipeline mirrors
-    // Dedup.pairsFromBucketsIds step for step — same observe metrics
-    // from the same bucket sizes, same maxBucket cap, same round-robin
-    // spread before the quadratic explode (bucket rows now carry the
-    // vectors, ~targetBucket×528 B each — still KBs), and the kernel
+    // stages at sf0.1). The bucket pipeline is collect_list with the
+    // observed maxBucket cap (the three no-silent-caps counters), then
+    // a round-robin spread before the quadratic explode (bucket rows
+    // carry the vectors, ~targetBucket×528 B each — still KBs; AQE
+    // would coalesce them onto few tasks otherwise), and the kernel
     // emits pairs in the same id_b > id_a value order with
     // sim = ArrayDot(vec_a, vec_b)'s exact fold. A pair found by both
     // bands carries the identical sim, so the cross-band

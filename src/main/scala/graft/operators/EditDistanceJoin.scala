@@ -28,12 +28,12 @@ import org.apache.spark.sql.functions._
   * discards), not to block size; the key explosion is the fixed
   * (1 + L + C(L,2))-per-row constant, linear in rows.
   *
-  * Pairs are generated id-only inside capped buckets (the shared
-  * [[graft.functions.Dedup.pairsFromBucketsIds]] machinery, with its
-  * observed-drop counters); payloads re-join by id, then the exact
-  * Levenshtein filter AND an exact blockCols equality check run per
-  * candidate — the 64-bit bucket hash can collide in principle, so
-  * nothing correctness-bearing rides the hash.
+  * Pairs are generated id-only inside capped buckets by
+  * [[graft.plans.SortedRunPairs]], graft's one id-only pair generator
+  * (its SQL metrics count the capped drops); payloads re-join by id,
+  * then the exact Levenshtein filter AND an exact blockCols equality
+  * check run per candidate — the 64-bit bucket hash can collide in
+  * principle, so nothing correctness-bearing rides the hash.
   *
   * Mirrors reference semantics at pippin's linkage surface (see
   * q_linkage); the oracle stays the declarative in-block self-join —
@@ -160,57 +160,54 @@ object EditDistanceJoin {
     *
     * maxDist must be ≤ 2 (the deletion neighborhood enumerated here);
     * smaller values just tighten the verify filter — the candidate
-    * set for τ=2 is a superset of the τ<2 one.
+    * set for τ=2 is a superset of the τ<2 one. `idCol` must be long.
     */
   def selfJoin(df: DataFrame, idCol: String, nameCol: String,
                blockCols: Seq[String], maxDist: Int = 2,
                maxBucket: Int = 10000): DataFrame = {
+    graft.functions.Dedup.requireLongIds("EditDistanceJoin.selfJoin", df, idCol)
     require(maxDist >= 0 && maxDist <= 2, "deletion neighborhood enumerates tau <= 2")
     val keyed = deletionKeys(df, idCol, nameCol, blockCols)
     verifyCandidates(candidatePairs(keyed, maxBucket), df, idCol, nameCol,
       blockCols, maxDist)
   }
 
-  /** Candidate pairs from a deletion-neighborhood key table. On long
-    * ids this is the [[graft.plans.SortedRunPairs]] streaming operator:
-    * variant keys are ~97 % singletons (25.8 M keys / 150 k names at
-    * sf1), so pairsFromBucketsIds' collect_list paid a partial AND a
-    * final ObjectHashAggregate map over every row before producing a
-    * pair — measured +3.7 s at sf1/32 cpus vs 0.6 s for the keys
-    * themselves (EditJoinProbe); the operator replaces both maps, the
-    * bucket spread and the pair explode with one spillable sort and a
-    * run walk (pair SET identical — SortedRunPairsSpec). The explicit
+  /** Candidate pairs from a deletion-neighborhood key table (long
+    * ids), through the [[graft.plans.SortedRunPairs]] operator: variant
+    * keys are ~97 % singletons (25.8 M keys / 150 k names at sf1), so
+    * a collect_list bucket aggregate paid a partial AND a final
+    * ObjectHashAggregate map over every row before producing a pair —
+    * measured +3.7 s at sf1/32 cpus vs 0.6 s for the keys themselves
+    * (EditJoinProbe); the operator's one sort and run walk replace
+    * both maps, the bucket spread and the pair explode. The explicit
     * keyed repartition pins the stage wide (user repartitions are
-    * exempt from AQE coalescing — the pairsFromBucketsIds rationale)
+    * exempt from AQE coalescing, and the key rows are bytes-small)
     * and already satisfies the operator's required distribution. The
-    * observe() drop counters become the operator's SQL metrics.
-    * Non-long id types keep the legacy aggregate form.
+    * capped drops are the operator's SQL metrics. Shared by
+    * [[selfJoin]] and [[graft.functions.LinkageIndex]]'s build and
+    * append.
     */
-  private[graft] def candidatePairs(keyed: DataFrame, maxBucket: Int): DataFrame =
-    if (keyed.schema("id").dataType == org.apache.spark.sql.types.LongType) {
-      val par = keyed.sparkSession.sparkContext.defaultParallelism
-      // band is CONSTANT on every deletion-neighborhood key table
-      // (deletionKeys emits lit(0); the persisted keys/ parquet is
-      // written by deletionKeys) — so (band, bkey) grouping degenerates
-      // to bkey grouping and the exchange need not carry the column at
-      // all: shuffle (id, bkey) only and re-attach a literal band above
-      // (HashPartitioning(bkey) satisfies the operator's
-      // ClusteredDistribution(band, bkey); the leading constant sort
-      // key is free). Pair sets are band-value-independent for any
-      // constant, so lit(0) is exact. Any other band fails the job
-      // here instead of merging bands silently; on deletionKeys' own
-      // literal band the check folds away at plan time.
-      val band0 = keyed.filter(when(col("band") === 0, lit(true)).otherwise(
-        raise_error(lit("EditDistanceJoin.candidatePairs: band must be 0 " +
-          "(a deletionKeys key table)"))))
-      graft.plans.SortedRunPairs.pairs(
-          band0.select(col("id"), col("bkey"))
-            .repartition(par, col("bkey"))
-            .select(col("id"), lit(0).as("band"), col("bkey")),
-          maxBucket)
-        .dropDuplicates("id_a", "id_b")
-    } else {
-      graft.functions.Dedup.pairsFromBucketsIds(keyed, maxBucket,
-        "edit_join_drops")
-    }
+  private[graft] def candidatePairs(keyed: DataFrame, maxBucket: Int): DataFrame = {
+    val par = keyed.sparkSession.sparkContext.defaultParallelism
+    // band is CONSTANT on every deletion-neighborhood key table
+    // (deletionKeys emits lit(0); the persisted keys/ parquet is
+    // written by deletionKeys) — so (band, bkey) grouping degenerates
+    // to bkey grouping and the exchange need not carry the column at
+    // all: shuffle (id, bkey) only and re-attach a literal band above
+    // (HashPartitioning(bkey) satisfies the operator's
+    // ClusteredDistribution(band, bkey); the leading constant sort
+    // key is free). Pair sets are band-value-independent for any
+    // constant, so lit(0) is exact. Any other band fails the job
+    // here instead of merging bands silently; on deletionKeys' own
+    // literal band the check folds away at plan time.
+    val band0 = keyed.filter(when(col("band") === 0, lit(true)).otherwise(
+      raise_error(lit("EditDistanceJoin.candidatePairs: band must be 0 " +
+        "(a deletionKeys key table)"))))
+    graft.plans.SortedRunPairs.pairs(
+        band0.select(col("id"), col("bkey"))
+          .repartition(par, col("bkey"))
+          .select(col("id"), lit(0).as("band"), col("bkey")),
+        maxBucket)
+      .dropDuplicates("id_a", "id_b")
+  }
 }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
@@ -56,13 +57,17 @@ object Bm25TopK {
   /** Logical node: child must produce exactly (id LONG, idx INT,
     * c DOUBLE); output is (query_id, doc_id, score). The output
     * attribute seq is a constructor field so plan copies keep the
-    * expression ids stable.
+    * expression ids stable; [[newInstance]] renews them, so the
+    * node's output can be joined with itself.
     */
   final case class ScoreTopKNode(qs: ScoreKernels.Bm25QuerySet, k: Int,
                                  child: LogicalPlan,
-                                 outputAttrs: Seq[Attribute]) extends UnaryNode {
+                                 outputAttrs: Seq[Attribute])
+      extends UnaryNode with MultiInstanceRelation {
     override def output: Seq[Attribute] = outputAttrs
     override def producedAttributes: AttributeSet = AttributeSet(outputAttrs)
+    override def newInstance(): ScoreTopKNode =
+      copy(outputAttrs = outputAttrs.map(_.newInstance()))
     override protected def withNewChildInternal(c: LogicalPlan): ScoreTopKNode =
       copy(child = c)
   }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
@@ -11,38 +12,52 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** Single-pass in-bucket pair generation over (id, band, bkey) rows
-  * CLUSTERED and LOCALLY SORTED by (band, bkey) — the streaming twin
-  * of [[graft.functions.Dedup.pairsFromBucketsIds]]'s
-  * groupBy(band, bkey).collect_list + explode(longPairs) pipeline.
+/** Single-pass in-bucket pair generation over (id LONG, band INT,
+  * bkey LONG) rows CLUSTERED and LOCALLY SORTED by (band, bkey) —
+  * graft's one pair generator for id-only buckets. Its callers:
+  * - [[graft.functions.Dedup.minhashCandidates]] (minhash bands);
+  * - [[graft.functions.Similarity.embeddingNearDups]] (hyperplane
+  *   bands);
+  * - [[graft.operators.EditDistanceJoin.candidatePairs]]
+  *   (deletion-neighborhood keys), behind
+  *   [[graft.operators.EditDistanceJoin.selfJoin]] and
+  *   [[graft.functions.LinkageIndex]]'s build and append.
+  * Buckets that carry a payload the pair step reads (simhashPairs'
+  * hashes, embeddingNearDupsAxis' vectors, lshBandSweep's config)
+  * keep collect_list + an in-bucket kernel instead.
   *
-  * Why: on blocking-key tables where most keys are singletons (the
-  * FastSS deletion neighborhood: ~97 % of the 25.8 M variant keys at
-  * sf1 touch one name), the collect_list aggregate pays a partial
+  * Why: a groupBy(band, bkey).collect_list pipeline pays a partial
   * ObjectHashAggregate map over every input row AND a final one over
-  * every distinct key before a single pair is produced — measured
-  * +3.7 s wall at sf1/32 cpus against 0.6 s for the key generation
-  * itself (EditJoinProbe). This operator rides the same hash(band,
-  * bkey) exchange but replaces both aggregate maps, the bucket-array
-  * materialization, the round-robin bucket spread and the pair
-  * explode with one spillable radix sort plus a linear run walk.
+  * every distinct key before a single pair is produced, then a
+  * round-robin bucket spread and a pair explode. On blocking-key
+  * tables where most keys are singletons (the FastSS deletion
+  * neighborhood: ~97 % of the 25.8 M variant keys at sf1 touch one
+  * name) that measured +3.7 s wall at sf1/32 cpus against 0.6 s for
+  * the key generation itself (EditJoinProbe). This operator rides one
+  * hash(band, bkey) exchange — its required distribution places it —
+  * and replaces all of that with one spillable radix sort plus a
+  * linear run walk.
   *
-  * Result identity with the replaced pipeline (as a pair SET — both
-  * forms feed the same dropDuplicates(id_a, id_b)):
-  * - a run of equal (band, bkey) ≡ one collect_list bucket; null ids
-  *   are skipped exactly like collect_list skips them, and null
-  *   band/bkey group together exactly like groupBy's null handling;
-  * - runs with fewer than 2 non-null ids emit nothing (size >= 2);
-  * - runs with more than `maxBucket` ids are dropped whole (the
-  *   observed cap), counted in the `droppedBuckets` / `droppedIds`
-  *   SQL metrics — the operator-level replacement for the observe()
-  *   counters, which cannot attach because the bucket rows never
-  *   exist as a DataFrame here;
+  * Semantics, as a pair SET (callers feed dropDuplicates(id_a, id_b)):
+  * - a run of equal (band, bkey) is one bucket; null ids are skipped
+  *   (collect_list's rule) and null band/bkey values group together
+  *   (groupBy's rule);
+  * - runs with fewer than 2 non-null ids emit nothing;
+  * - runs with more than `maxBucket` ids are dropped whole. A silent
+  *   cap would hide recall loss, so the drop is counted in the
+  *   operator's SQL metrics: `candidateBuckets` (runs with ≥ 2 ids,
+  *   dropped included), `droppedBuckets` and `droppedIds`. Nonzero
+  *   `droppedIds` is the signal to re-size the banding;
   * - a kept run emits every (a, b) with b > a over its distinct id
-  *   VALUES — exactly longPairs' value-ordered pair set (duplicate
-  *   values inside one bucket never pair with themselves under the
-  *   strict >, and cross-duplicate repeats are dropDuplicates food in
-  *   both forms).
+  *   VALUES (duplicate values never pair with themselves).
+  *
+  * Known Spark quirk (pinned in DedupSpec): if EVERY bucket is
+  * dropped, AQE's empty-relation propagation replaces the subtree
+  * above the empty stage, and the final adaptive plan no longer holds
+  * this operator, so its metrics cannot be read there even though the
+  * stage ran. The all-dropped case is observable with AQE off (or from
+  * the candidate count being 0, which IS loud); the partial-drop case
+  * a mis-sized production run hits reads fine under AQE.
   *
   * Memory is O(maxBucket) per task (one long buffer); pair emission
   * is lazy, so a dense bucket's quadratic output streams instead of
@@ -54,10 +69,15 @@ object SortedRunPairs {
     AttributeReference("id_a", LongType, nullable = false)(),
     AttributeReference("id_b", LongType, nullable = false)())
 
+  /** Fresh output attributes, renewed by [[newInstance]] so the
+    * node's output can be joined with itself. */
   final case class RunPairsNode(maxBucket: Int, child: LogicalPlan,
-                                outputAttrs: Seq[Attribute]) extends UnaryNode {
+                                outputAttrs: Seq[Attribute])
+      extends UnaryNode with MultiInstanceRelation {
     override def output: Seq[Attribute] = outputAttrs
     override def producedAttributes: AttributeSet = AttributeSet(outputAttrs)
+    override def newInstance(): RunPairsNode =
+      copy(outputAttrs = outputAttrs.map(_.newInstance()))
     override protected def withNewChildInternal(c: LogicalPlan): RunPairsNode =
       copy(child = c)
   }
@@ -187,9 +207,9 @@ object SortedRunPairs {
   /** In-bucket (id_a, id_b) candidate pairs over (id LONG, band INT,
     * bkey LONG) rows: buckets of fewer than 2 ids emit nothing,
     * buckets above `maxBucket` are dropped whole (SQL-metric-counted).
-    * Feed the result through dropDuplicates(id_a, id_b) exactly like
-    * pairsFromBucketsIds' explode. Planned by [[GraftStrategy]] on any
-    * session.
+    * Feed the result through dropDuplicates(id_a, id_b): a pair found
+    * in several buckets is emitted once per bucket. Planned by
+    * [[GraftStrategy]] on any session.
     */
   def pairs(df: DataFrame, maxBucket: Int): DataFrame = {
     require(maxBucket >= 2, "maxBucket must be >= 2")

@@ -941,7 +941,7 @@ object LlmQueries {
     // Axis-aligned sign blocking: bucket membership is sign-only (no
     // float arithmetic — normalization preserves sign), so buckets are
     // engine-exact; only the r4-rounded cosine touches floats. The
-    // per-(band,bucket) size cap mirrors pairsFromBucketsIds'
+    // per-(band,bucket) size cap mirrors embeddingNearDupsAxis'
     // maxBucket=10000 exactly, and the band width `half` mirrors
     // Similarity.adaptiveHalf's integer sizing (min h ≥ 2 with
     // 2^h·125 ≥ n), so the parity holds at ANY corpus size, not just

@@ -128,9 +128,9 @@ class DedupSpec extends AnyFunSuite {
 
   test("oversized-bucket drops are observed, not silent") {
     // the no-silent-caps rule as a test: a deliberately undersized cap
-    // must SHOW UP as a nonzero dropped-bucket/dropped-id metric riding
-    // the same job, so a mis-sized banding is a number on a dashboard
-    // instead of quietly missing duplicates
+    // must SHOW UP as a nonzero dropped-bucket/dropped-id metric of the
+    // pair operator that ran the job, so a mis-sized banding is a
+    // number on a dashboard instead of quietly missing duplicates
     val boiler = (1L to 25L).map(i =>
       (i, if (i <= 20) "same boilerplate text repeated everywhere ok"
           else s"unique document number $i with its own words entirely"))
@@ -142,41 +142,86 @@ class DedupSpec extends AnyFunSuite {
     // collect() (not count()) — metrics live on THIS Dataset's
     // QueryExecution; count() would execute a derived one
     capped.collect()
-    val m = capped.queryExecution.observedMetrics("lsh_drops_minhash")
+    val (_, droppedBuckets, droppedIds) = graft.plans.RunPairsMetrics.of(capped).get
     // 16 bands × one all-boilerplate bucket each, 20 ids per bucket
-    assert(m.getAs[Long]("dropped_buckets") == 16L)
-    assert(m.getAs[Long]("dropped_ids") == 16L * 20)
+    assert(droppedBuckets == 16L)
+    assert(droppedIds == 16L * 20)
     // a well-sized cap reports zero drops on the same data
     val ok = Dedup.minhashCandidates(boiler, "doc_id", "text", maxBucket = 100)
     ok.collect()
-    val m2 = ok.queryExecution.observedMetrics("lsh_drops_minhash")
-    assert(m2.getAs[Long]("dropped_buckets") == 0L)
-    assert(m2.getAs[Long]("dropped_ids") == 0L)
+    val (_, okBuckets, okIds) = graft.plans.RunPairsMetrics.of(ok).get
+    assert(okBuckets == 0L)
+    assert(okIds == 0L)
   }
 
   test("all-buckets-dropped degenerate case is observable with AQE off (Spark quirk)") {
     // when EVERY bucket is dropped AQE propagates the empty relation
-    // over the CollectMetrics node, so the final adaptive plan no
-    // longer carries it and observedMetrics comes back empty — the
-    // accumulator ran, the collection path lost it. Pin the quirk (and
-    // that the metric is correct with AQE off) so a Spark upgrade that
-    // fixes collection shows up as this test failing.
+    // over the pair operator, so the final adaptive plan no longer
+    // carries it and its metrics cannot be read — the stage ran, the
+    // plan lost it. Pin the quirk (and that the metrics are correct
+    // with AQE off) so a Spark upgrade that keeps the node shows up as
+    // this test failing.
     val boiler = (1L to 20L).map(i => (i, "same boilerplate text repeated everywhere ok"))
       .toDF("doc_id", "text")
     val aqeCase = Dedup.minhashCandidates(boiler, "doc_id", "text", maxBucket = 5)
     assert(aqeCase.collect().isEmpty)
-    assert(!aqeCase.queryExecution.observedMetrics.contains("lsh_drops_minhash"),
-      "AQE now preserves CollectMetrics under empty-relation propagation — " +
+    assert(graft.plans.RunPairsMetrics.of(aqeCase).isEmpty,
+      "AQE now keeps the pair operator under empty-relation propagation — " +
         "drop the AQE-off workaround in this test and celebrate")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val capped = Dedup.minhashCandidates(boiler, "doc_id", "text", maxBucket = 5)
       assert(capped.collect().isEmpty)
-      val m = capped.queryExecution.observedMetrics("lsh_drops_minhash")
-      assert(m.getAs[Long]("dropped_buckets") == 16L)
-      assert(m.getAs[Long]("dropped_ids") == 16L * 20)
-      assert(m.getAs[Long]("candidate_buckets") == 16L)
+      val (candidateBuckets, droppedBuckets, droppedIds) =
+        graft.plans.RunPairsMetrics.of(capped).get
+      assert(droppedBuckets == 16L)
+      assert(droppedIds == 16L * 20)
+      assert(candidateBuckets == 16L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("simhash bucket-cap drops are observed, not silent") {
+    // 20 identical boilerplate docs fill one bucket per band (4 bands
+    // at maxHamming 3) past the cap of 5; the duplicate pair 21/22
+    // shares no band with them and keeps four buckets under the cap,
+    // so the run is not all-dropped (AQE would lose the metric)
+    val pairText = "an unrelated pair of notes on river barges and canal locks in winter"
+    val docsWithPair = ((1L to 20L).map(i => (i, "same boilerplate text repeated everywhere ok")) ++
+      Seq((21L, pairText), (22L, pairText))).toDF("doc_id", "text")
+    val pairs = Dedup.simhashPairs(docsWithPair, "doc_id", "text", maxBucket = 5)
+    // collect() on THIS Dataset — observedMetrics live on its QueryExecution
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((21L, 22L)))
+    val m = pairs.queryExecution.observedMetrics("lsh_drops_simhash")
+    assert(m.getAs[Long]("dropped_buckets") == 4L)
+    assert(m.getAs[Long]("dropped_ids") == 4L * 20)
+  }
+
+  test("long-id pair entry points reject other id types before any job") {
+    val texts = Seq(("a", "some text here", "smith", 0)).toDF("doc_id", "text", "name", "blk")
+    val vecs = Seq(("a", Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val root = java.nio.file.Files.createTempDirectory("graft_idcheck").toString
+    // (function, id column, call)
+    val calls: Seq[(String, String, () => Any)] = Seq(
+      ("Dedup.minhashCandidates", "doc_id", () => Dedup.minhashCandidates(texts, "doc_id", "text")),
+      ("Dedup.lshBandSweep", "doc_id", () => Dedup.lshBandSweep(texts, "doc_id", "text")),
+      ("Dedup.sharedShingleEdges", "doc_id", () => Dedup.sharedShingleEdges(texts, "doc_id", "text")),
+      ("Dedup.simhashPairs", "doc_id", () => Dedup.simhashPairs(texts, "doc_id", "text")),
+      ("Similarity.embeddingNearDups", "vec_id", () => Similarity.embeddingNearDups(vecs, 0.9)),
+      ("Similarity.bruteForceTopK", "vec_id", () => Similarity.bruteForceTopK(vecs, vecs, 1)),
+      ("EditDistanceJoin.selfJoin", "doc_id", () =>
+        graft.operators.EditDistanceJoin.selfJoin(texts, "doc_id", "name", Seq("blk"))),
+      ("LinkageIndex.writeIndex", "doc_id", () =>
+        LinkageIndex.writeIndex(texts, "doc_id", "name", Seq("blk"), root)),
+      ("LinkageIndex.appendIndex", "doc_id", () =>
+        LinkageIndex.appendIndex(texts, "doc_id", "name", Seq("blk"), root)))
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-idcheck", "id type checks")
+    try calls.foreach { case (fn, idCol, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$fn: id column '$idCol' must be bigint, got string"),
+        e.getMessage)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("graft-idcheck").isEmpty)
   }
 
   test("compactHashIndex folds committed deltas, carries replay-live tagged ones") {

@@ -162,6 +162,68 @@ class PqSpec extends AnyFunSuite {
       nprobe = 4, rerankFactor = 8)) == expected)
   }
 
+  test("compactIndex keeps a delta committed while it waited for the writer lock") {
+    import graft.operators.Versioned
+    import java.nio.file.{Files, Path}
+    import java.util.concurrent.CountDownLatch
+    def copyTree(from: Path, to: Path): Unit = {
+      val walk = Files.walk(from)
+      try walk.forEach { p =>
+        val t = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      } finally walk.close()
+    }
+    def local(p: String): Path = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(p).toUri.getPath)
+    val emb = AnnTestData.clustered(spark, n = 120)
+    val base = emb.filter($"vec_id" < 100)
+    val cents = Ivf.trainCentroids(base, "vec_id", "embedding", k = 4)
+    val cbs = Pq.trainCodebooks(base, "vec_id", "embedding", m = 8, ksub = 8)
+    val dir = Files.createTempDirectory("graft_pq_race")
+    Pq.writeIndex(base, dir.toString, cents, cbs)
+    // the batch's delta, prepared by appendToIndex on a copy of the index
+    val copy = Files.createTempDirectory("graft_pq_race_copy")
+    copyTree(dir, copy)
+    Pq.appendToIndex(emb.filter($"vec_id" >= 100), copy.toString)
+    val prepared = local(Versioned.listDeltas(spark,
+      Versioned.resolve(spark, copy.toString).get).head)
+    // A holds the writer lock inside commitDelta until released; B
+    // compacts meanwhile and must wait for the lock
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    @volatile var failure: Option[Throwable] = None
+    def thread(body: => Unit): Thread = new Thread(() =>
+      try body catch { case t: Throwable => failure = Some(t) })
+    val appender = thread {
+      Versioned.commitDelta(spark, dir.toString,
+        Versioned.resolve(spark, dir.toString).get) { d =>
+        entered.countDown()
+        release.await()
+        copyTree(prepared, local(d))
+      }
+    }
+    appender.start()
+    entered.await()
+    val compactor = thread(Pq.compactIndex(spark, dir.toString))
+    compactor.start()
+    def waitsForLock: Boolean = compactor.getState == Thread.State.BLOCKED &&
+      compactor.getStackTrace.exists(f =>
+        f.getClassName == "graft.operators.Versioned$" && f.getMethodName == "commitNew")
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    while (!waitsForLock && compactor.isAlive && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    val blocked = waitsForLock
+    release.countDown()
+    appender.join()
+    compactor.join()
+    failure.foreach(throw _)
+    assert(blocked, "compactIndex never waited on the writer lock")
+    val cdir = Versioned.resolve(spark, dir.toString).get
+    assert(Versioned.listDeltas(spark, cdir).isEmpty)
+    assert(spark.read.parquet(s"$cdir/codes").select("neighbor_id").as[Long]
+      .collect().toSet == (0L until 120L).toSet)
+    assert(spark.read.parquet(s"$cdir/vectors").count() == 120)
+  }
+
   test("a second writeIndex commits a new version; readers never see a partial") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_v").toString
     val emb = AnnTestData.clustered(spark, n = 300)

@@ -17,7 +17,7 @@ class SortedRunPairsSpec extends AnyFunSpec {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** The legacy pipeline, inline (pairsFromBucketsIds' shape). */
+  /** The collect_list pipeline, inline (groupBy + LongPairs explode). */
   private def legacy(banded: DataFrame, maxBucket: Int): DataFrame = {
     val buckets = banded
       .groupBy("band", "bkey")
@@ -66,6 +66,11 @@ class SortedRunPairsSpec extends AnyFunSpec {
       val banded = rows.toDF("id", "band", "bkey").repartition(3)
       assertSame(banded, 4)
       assert(viaOperator(banded, 4).count() === 6 + 1) // C(4,2) + C(2,2)
+      // the cap is counted: buckets 0..2 are candidates, bucket 0 and
+      // its 5 ids dropped
+      val pairs = SortedRunPairs.pairs(banded, 4)
+      pairs.collect()
+      assert(RunPairsMetrics.of(pairs) === Some((3L, 1L, 5L)))
     }
 
     it("skips null ids like collect_list and groups null keys like groupBy") {
