@@ -120,16 +120,21 @@ object Dedup {
     * `agg(...) over Window.partitionBy(key)` on an unbounded-
     * cardinality hash key (span hash, shingle hash, segment hash).
     * WindowExec hash-partitions on the key and BUFFERS each key group
-    * in ONE task (ExternalAppendOnlyUnsafeRowArray), and AQE's skew
-    * handling covers joins, not windows — so one boilerplate span
-    * held by millions of documents (a license header, a templated
-    * intro) is a guaranteed single-task multi-GB spilling straggler,
-    * in exactly the corpora the span/shingle family targets. This
+    * in ONE task (ExternalAppendOnlyUnsafeRowArray), and AQE does not
+    * split windows — so one boilerplate span held by millions of
+    * documents (a license header, a templated intro) is a guaranteed
+    * single-task multi-GB spilling straggler, in exactly the corpora
+    * the span/shingle family targets. This
     * shape instead computes the per-key stats with `groupBy`
     * (map-side partial aggregation collapses each mapper's duplicate
     * keys BEFORE the shuffle) and merge-joins the filtered stats back
-    * onto the rows: sort-merge streams the probe side — no group
-    * buffering — and IS AQE-skew-splittable.
+    * onto the rows: sort-merge streams a hot key's rows through one
+    * task without buffering its group (the stats side holds one row
+    * per key). The join is NOT split by AQE's skew handling:
+    * `OptimizeSkewedJoin` only splits a join whose both sides read a
+    * shuffle stage directly, and the stats side here is
+    * Sort ← Filter ← HashAggregate ← shuffle stage, so a hot key still
+    * runs in one task — it streams, it does not spill a buffered group.
     *
     * `statsFilter` prunes the stats table before the join (a df band,
     * an ndocs ≥ 2 floor), so the build side carries only the keys the

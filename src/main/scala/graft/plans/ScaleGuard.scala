@@ -19,11 +19,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *  3. a window PARTITIONED BY A HASH-DERIVED KEY (xxhash64 / md5 /
   *     murmur3 / sha / crc32 of content) — an unbounded-cardinality
   *     key whose skew tracks the data: WindowExec buffers each key
-  *     group in ONE task and AQE's skew handling covers joins, not
-  *     windows, so one boilerplate span/shingle/segment held by
-  *     millions of rows is a guaranteed single-task straggler. Use
-  *     the [[graft.functions.Dedup.joinKeyStats]] shape instead
-  *     (map-side-combinable groupBy + merge join back). The lint
+  *     group in ONE task and AQE does not split windows, so one
+  *     boilerplate span/shingle/segment held by millions of rows is a
+  *     guaranteed single-task spilling straggler. Use the
+  *     [[graft.functions.Dedup.joinKeyStats]] shape instead
+  *     (map-side-combinable groupBy + merge join back): a hot key
+  *     still runs in one task — AQE does not skew-split that join
+  *     either, its stats side is not a bare shuffle stage — but the
+  *     merge join streams the key's rows instead of buffering the
+  *     group. The lint
   *     traces partition keys through Alias definitions in the
   *     window's subtree, so renaming the hash column doesn't hide it.
   *

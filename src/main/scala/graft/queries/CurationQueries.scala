@@ -97,8 +97,13 @@ object CurationQueries {
     //      one query, one oracle, proving the stages stack without
     //      driver round-trips.
     "q_curate_e2e" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.spread(Tables.documents(s, d))
+      // doc_id is the one key this query places: the corpus spread is
+      // a doc_id-keyed repartition (the same text bytes a round robin
+      // would move), the keep semi-join below preserves that layout,
+      // and the per-doc steps over the kept docs (the span dedup and
+      // the NLL aggregate) read it without an exchange of their own
+      val docs = Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       // named one-pass Observe metrics at each funnel stage: the stage
       // row counts ride the job (no extra scan) and QueriesSpec asserts
       // them, so a silent filter/dedup regression fails the suite even
@@ -107,12 +112,12 @@ object CurationQueries {
         graft.functions.TextAnalysis.nWords(col("text")).as("n_words"),
         graft.functions.TextAnalysis.langIdScored(col("text")).as("lang_guess"))
         .observe("curate_scored", count(lit(1)).as("rows"))
-      // NOT persisted (round-19 wave 3 measurement): caching this
-      // text-heavy funnel head for its two references (keep aggregate +
-      // kept join side) measured 2.48 → 3.15 s min-warm — the row
+      // the funnel head is NOT persisted (round-19 wave 3 measurement):
+      // caching it for its two references (keep aggregate + kept join
+      // side) measured 2.48 → 3.15 s min-warm — the row
       // materialization breaks the scan→filter→join whole-stage fusion
-      // and costs more than the saved langIdScored replay; an eager
-      // count() barrier variant measured +0.35 s. Both rejected.
+      // and costs more than the saved langIdScored replay. The one
+      // cache sits after the dedup (keptDocs below).
       val filtered = scored
         .filter(col("n_words") >= 10 && col("lang_guess") =!= "unk")
         .observe("curate_filtered", count(lit(1)).as("rows"))
@@ -130,44 +135,33 @@ object CurationQueries {
         .select("doc_id")
       val kept = filtered.join(keep, Seq("doc_id"), "left_semi")
         .observe("curate_kept", count(lit(1)).as("rows"))
+      // persisted: the kept docs feed three consumers (the span
+      // pipeline, the LM vocabulary aggregate and the per-doc NLL
+      // aggregate) — without the persist each one replays the whole
+      // scan→filter→dedup funnel (the q_simjoin shingle-persist
+      // rationale). The cache holds one row per kept doc in the
+      // doc_id-keyed layout, so no token row crosses an exchange on
+      // its way to a per-doc step; Bench/Verify release it between
+      // queries via CacheHandles
+      val keptDocs = graft.plans.CacheHandles.track("query.curate.kept",
+        kept.select(col("doc_id"), col("lang_guess"), col("n_words"), col("text"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
       // span-trim IN THE SAME PASS: the span pipeline carries
       // (lang_guess, n_words) alongside each span row, so the per-doc
       // duplicated-span fraction, the trim filter, and the final
-      // per-language stats need NO join back to `kept` (a join would
-      // re-run the whole upstream funnel for a second scan). Every
+      // per-language stats need NO join back to the kept docs. Every
       // kept doc has ≥10 words ≥ SpanK=8, so none drop out of the
-      // explode. Span document frequency is the same scale-safe
-      // groupBy + merge-left-join shape as q_span_dup_frac
-      // (Dedup.joinKeyStats — never a window over the span hash).
+      // explode. Span hashes come from the per-doc codegen kernel
+      // (TextHashSpec pins it bit-identical to posexplode + lead +
+      // xxhash64), so the plan has no window. Span document frequency
+      // is the same scale-safe groupBy + merge-left-join shape as
+      // q_span_dup_frac (Dedup.joinKeyStats — never a window over the
+      // span hash).
       val spanK = 8
-      val toks = graft.functions.Dedup.tokens(col("text"))
-      // persisted: THREE consumers flow from the kept docs' exploded
-      // tokens (the span pipeline, the LM vocabulary aggregate, and
-      // the per-doc NLL scoring join) — without the persist each one
-      // replays the whole scan→filter→dedup funnel (the q_simjoin
-      // shingle-persist rationale); Bench/Verify release between
-      // queries via CacheHandles
-      // round-19 wave 3: keyed defaultParallelism repartition INTO the
-      // cache — the semi-join output upstream is bytes-small, so AQE
-      // coalesced the exchange and the span window ran on 2-3 tasks
-      // (~1.9 s serial at sf0.1, StageProfile stages 60/62). Keying by
-      // doc_id both spreads the token rows across every core AND lets
-      // the span window (partitionBy doc_id) and the per-doc NLL
-      // groupBy reuse the cached hash(doc_id) layout without their own
-      // exchanges; eager count per the concurrent-consumer rationale
-      // (three consumers fan out of this cache).
-      val tokRows = graft.plans.CacheHandles.track("query.curate.tokrows",
-        kept
-          .select(col("doc_id"), col("lang_guess"), col("n_words"),
-            posexplode(toks))
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      val parts = col("col") +: (1 until spanK).map(j => lead(col("col"), j).over(w))
-      val spans = tokRows
+      val spans = keptDocs
         .select(col("doc_id"), col("lang_guess"), col("n_words"),
-          xxhash64(parts: _*).as("h"), parts.last.isNotNull.as("full"))
-        .filter(col("full"))
+          explode(graft.plans.TextHashCols.shingleXx64(col("text"), spanK,
+            fallback = false)).as("h"))
         .dropDuplicates("doc_id", "h")
       val trimmed = graft.functions.Dedup.joinKeyStats(spans, "h",
           Seq(count(lit(1)).as("nd")), col("nd") >= 2, "left")
@@ -181,15 +175,19 @@ object CurationQueries {
       // token stream (vocab aggregates map-side, broadcasts back —
       // the q_lm_score shape), per-doc mean NLL r6-rounded so the
       // threshold comparison is engine-identical, then the fixed
-      // cutoff. The NLL side is docs-scale (unbounded), so the join
-      // back to the trimmed survivors is merge-hinted.
-      val vocab = tokRows.groupBy(col("col").as("t"))
-        .agg(count(lit(1)).as("c"))
-      val totalN = vocab.agg(sum("c").as("n_total"))
+      // cutoff. The token total sums a per-doc token count over the
+      // kept docs, so the vocabulary is aggregated once. The NLL side
+      // is docs-scale (unbounded), so the join back to the trimmed
+      // survivors is merge-hinted.
+      val toks = keptDocs.select(col("doc_id"),
+        explode(graft.functions.Dedup.tokens(col("text"))).as("t"))
+      val vocab = toks.groupBy("t").agg(count(lit(1)).as("c"))
+      val totalN = keptDocs.agg(
+        sum(graft.plans.TextHashCols.tokenCount(col("text"))).as("n_total"))
       val probs = vocab.crossJoin(broadcast(totalN))
         .select(col("t"),
           (-log(col("c").cast("double") / col("n_total"))).as("nll"))
-      val nll = tokRows.select(col("doc_id"), col("col").as("t"))
+      val nll = toks
         .join(broadcast(probs), "t")
         .groupBy("doc_id")
         .agg(EngineNeutral.roundHalfUp(avg("nll"), 6).as("avg_nll"))

@@ -736,10 +736,14 @@ object Streams {
         val firsts = filtered.groupBy("h").agg(min(col(idCol)).as("_keep"))
         val seen = Dedup.readHashIndex(spark, exactV, excludeTag = tag,
           schema = Some(Dedup.Md5IndexSchema))
+        // keyed by id INTO the cache: the span rows, the span-score and
+        // NLL joins and the per-doc aggregates read this layout, so no
+        // exchange above the cache re-keys the kept docs by id
         val kept = filtered
           .join(firsts, Seq("h")).filter(col(idCol) === col("_keep"))
           .join(seen.hint("merge"), Seq("h"), "left_anti")
           .drop("_keep")
+          .repartition(spark.sparkContext.defaultParallelism, col(idCol))
           .persist(memory)
         try {
           // the span probe (persisted) feeds both the trim scores

@@ -177,6 +177,48 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("q_curate_e2e keys the funnel by doc_id once: no window, no token-row exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    graft.plans.CacheHandles.release("query.curate.", blocking = true)
+    val df = SparkEntry.queries("q_curate_e2e")(spark, sf)
+    val l = new Bench.TaskTotals
+    spark.sparkContext.addSparkListener(l)
+    try df.collect()
+    finally {
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
+      graft.plans.CacheHandles.release("query.curate.", blocking = true)
+    }
+    val all = PlanNodes(df.queryExecution.executedPlan)
+    assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "q_curate_e2e no longer caches its kept docs — plan shape changed?")
+    // span hashes come from the per-doc kernel, not posexplode + lead
+    val windows = all.collect { case w: WindowExec => w }
+    assert(windows.isEmpty, s"q_curate_e2e runs ${windows.size} WindowExec:\n${windows.mkString("\n")}")
+    // the corpus spread is the one doc_id-keyed repartition; a second
+    // one would re-shuffle rows (token rows, at the parent) by doc_id
+    val keyed = all.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+        e.outputPartitioning
+    }.collect {
+      case HashPartitioning(Seq(a: Attribute), _) if a.name == "doc_id" => a
+    }
+    assert(keyed.size == 1,
+      s"expected exactly one doc_id-keyed repartition, found ${keyed.size}")
+    // 638,130 B measured with the keyed kept-docs cache; the token-row
+    // cache it replaced (round-robin spread, then the tokRows
+    // repartition, window spans and a second vocab aggregate for the
+    // total) wrote 928,503 B
+    val bytes = l.shuffleWrite.get
+    assert(bytes > 0 && bytes <= 720000L,
+      s"q_curate_e2e shuffled $bytes B at sf0.01 (ceiling 720000) — " +
+        "token rows crossing an exchange again?")
+  }
+
   test("no static broadcast miss across headline queries (auditPhysical)") {
     // every sort-merge/shuffled-hash join in the gated headliners must
     // have both sides genuinely above the broadcast threshold

@@ -10,11 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * span (a license header, a templated intro) sits in ~every
   * document. A `Window.partitionBy(spanHash)` computes document
   * frequency correctly at small SF but buffers each hash group in a
-  * single task (ExternalAppendOnlyUnsafeRowArray) — and AQE skew
-  * handling covers joins, not windows — so the common case at 100 TB
-  * is a guaranteed multi-GB one-task straggler. The scale-safe shape
-  * is [[graft.functions.Dedup.joinKeyStats]]: map-side-combinable
-  * groupBy stats merge-joined back.
+  * single task (ExternalAppendOnlyUnsafeRowArray) — and AQE does not
+  * split windows — so the common case at 100 TB is a guaranteed
+  * multi-GB one-task straggler. The scale-safe shape is
+  * [[graft.functions.Dedup.joinKeyStats]]: map-side-combinable
+  * groupBy stats merge-joined back. The hot span still runs in one
+  * task there (AQE does not skew-split that join: its stats side is
+  * not a bare shuffle stage), but the merge join streams its rows
+  * instead of buffering the group.
   *
   * Two gates:
   *  1. structural — no WindowExec in any family plan partitions by an

@@ -20,7 +20,7 @@ class CurateOnePassSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** Jobs per micro-batch allowed: the one-pass body runs 29 with the
+  /** Jobs per micro-batch allowed: the one-pass body runs 26 with the
     * LM gate on, the former re-read/re-count body 50 + 4 per live delta.
     */
   private val JobCeiling = 30
@@ -92,6 +92,65 @@ class CurateOnePassSpec extends AnyFunSuite {
       s"degenerate funnel: kept $kept, trimmed $trimmed, lm_kept $lmKept")
     assert(jobs.get <= JobCeiling,
       s"one micro-batch ran ${jobs.get} jobs (ceiling $JobCeiling)")
+  }
+
+  test("the span-score and NLL joins read the kept cache's doc_id layout: no re-keying exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = stage("graft_curate_layout")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before the stream starts: the stream's session clones
+    // the listener manager
+    spark.listenerManager.register(l)
+    try ingest(dir).stop() finally {
+      Bridge.drainListeners(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case q: QueryStageExec => unwrap(q.plan)
+      case o => o
+    }
+    // the children of a plan node, through AQE wrappers
+    def kids(p: SparkPlan): Seq[SparkPlan] = unwrap(p).children.map(unwrap)
+    // nodes of one stage: stops at exchanges and cache scans
+    def stageNodes(p: SparkPlan): Seq[SparkPlan] = unwrap(p) match {
+      case s @ (_: ShuffleExchangeExec | _: ReusedExchangeExec | _: InMemoryTableScanExec) => Seq(s)
+      case o => o +: kids(o).flatMap(stageNodes)
+    }
+    // the kept cache is the text-carrying one built by a join (the
+    // in-batch dedup; the scored cache joins nothing)
+    def isKept(m: InMemoryTableScanExec): Boolean =
+      m.relation.output.exists(_.name == "text") &&
+        graft.PlanNodes(m.relation.cachedPlan).exists(_.isInstanceOf[BaseJoinExec])
+    val all = graft.PlanNodes(plans.toArray(Array.empty[SparkPlan]).toSeq: _*)
+      .collect { case e: ShuffleExchangeExec => e }
+    def readsKept(e: ShuffleExchangeExec): Boolean =
+      kids(e).flatMap(stageNodes).exists {
+        case m: InMemoryTableScanExec => isKept(m)
+        case _ => false
+      }
+    assert(all.exists(readsKept), "no exchange reads the kept cache — plan shape changed?")
+    val rekeyed = all.filter(e => e.shuffleOrigin == ENSURE_REQUIREMENTS && readsKept(e) &&
+      (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "doc_id"
+        case _ => false
+      }))
+    assert(rekeyed.isEmpty,
+      s"${rekeyed.size} exchange(s) re-key the kept cache by doc_id: " +
+        rekeyed.map(_.simpleString(120)).mkString("; "))
   }
 
   test("crash after the exact append, before the span append: replay lands the span delta once") {
